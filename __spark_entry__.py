@@ -91,18 +91,16 @@ def _forecast_monthly_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _metric_query(metric: str):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyspark.sql import Window
         from pyspark.sql import functions as F
 
         from anofox_forecast_spark.functions import metrics as MX
-        panel = lineitem_panel(spark, sf_dir)
-        w = Window.partitionBy("id").orderBy("ds")
-        fv = (panel
-              .withColumn("forecast", F.lag("y", SEASON).over(w))
-              .withColumn("baseline", F.lag("y", 1).over(w))
-              .filter(F.col("forecast").isNotNull() & F.col("baseline").isNotNull())
+        over = "OVER (PARTITION BY id ORDER BY ds)"
+        fv = (lineitem_panel(spark, sf_dir)
+              .withColumn("forecast", F.expr(f"lag(y, {SEASON}) {over}"))
+              .withColumn("baseline", F.expr(f"lag(y, 1) {over}"))
+              .filter("forecast IS NOT NULL AND baseline IS NOT NULL")
               .withColumnRenamed("y", "actual")
-              .select("id", "ds", "actual", "forecast", "baseline"))
+              .selectExpr("id", "ds", "actual", "forecast", "baseline"))
         if metric == "mase":
             return MX.ts_mase_by(fv, "ds", "actual", "forecast", "baseline")
         if metric == "rmae":
@@ -263,13 +261,10 @@ def _prep_queries():
 
 
 def _hier_df(spark, sf_dir):
-    from pyspark.sql import functions as F
-
     from anofox_forecast_spark.sources import load_table
-    return load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_returnflag").alias("rf"), F.col("l_linestatus").alias("ls"),
-        F.date_trunc("day", "l_shipdate").alias("ds"),
-        F.col("l_quantity").alias("y"))
+    return load_table(spark, sf_dir, "lineitem").selectExpr(
+        "l_returnflag AS rf", "l_linestatus AS ls",
+        "date_trunc('day', l_shipdate) AS ds", "l_quantity AS y")
 
 
 def _hier_queries():
@@ -486,15 +481,13 @@ def _stats_queries():
 
 def _fv_df(spark, sf_dir):
     """Forecast-vs-actual derivation shared by metric/conformal queries."""
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
-    panel = lineitem_panel(spark, sf_dir)
-    w = Window.partitionBy("id").orderBy("ds")
-    return (panel
-            .withColumn("forecast", F.lag("y", SEASON).over(w))
-            .filter(F.col("forecast").isNotNull())
+    return (lineitem_panel(spark, sf_dir)
+            .withColumn("forecast", F.expr(
+                f"lag(y, {SEASON}) OVER (PARTITION BY id ORDER BY ds)"))
+            .filter("forecast IS NOT NULL")
             .withColumnRenamed("y", "actual")
-            .select("id", "ds", "actual", "forecast"))
+            .selectExpr("id", "ds", "actual", "forecast"))
 
 
 def _conformal_queries():
@@ -510,7 +503,7 @@ def _conformal_queries():
         out = C.ts_conformal_by(_fv_df(spark, sf), "id", "actual", "forecast",
                                 "forecast", {"alpha": 0.1})
         # arrays dropped for the oracle hash; scalars carry the calibration
-        return out.select("id", "coverage", "conformity_score", "method")
+        return out.selectExpr("id", "coverage", "conformity_score", "method")
 
     def q_interval_width(spark, sf):
         fv = (_fv_df(spark, sf)
@@ -1062,8 +1055,9 @@ def _llm_queries():
 
     def q_quality(spark, sf):
         return TX.text_quality(_docs(spark, sf), "text") \
-                 .select("doc_id", "n_words", "punct_ratio", "alpha_ratio",
-                         "stopword_ratio", "mean_word_len", "quality_score")
+                 .selectExpr("doc_id", "n_words", "punct_ratio",
+                             "alpha_ratio", "stopword_ratio",
+                             "mean_word_len", "quality_score")
 
     def q_entropy(spark, sf):
         return TX.text_entropy(_docs(spark, sf), "text") \
@@ -1080,28 +1074,22 @@ def _llm_queries():
         # doc_id; every doc_id % 3 == 0 stays clean) with the IDENTICAL
         # expression on both contract sides — the redaction regexes are
         # what's under test, cross-engine (Java regex vs RE2)
-        docs = _docs(spark, sf).select("doc_id", "text")
-        aug = docs.select(
+        aug = _docs(spark, sf).selectExpr(
             "doc_id",
-            F.when(F.col("doc_id") % 3 == 0, F.col("text")).otherwise(
-                F.concat(
-                    F.col("text"),
-                    F.lit(" contact user"), F.col("doc_id").cast("string"),
-                    F.lit("@mail"), (F.col("doc_id") % 7).cast("string"),
-                    F.lit(".com from 10."),
-                    (F.col("doc_id") % 250).cast("string"),
-                    F.lit(".0."), (F.col("doc_id") % 200).cast("string"),
-                    F.lit(" tel 555-867-"),
-                    F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
-                )).alias("text"))
-        return TX.pii_redact(aug, "text").select(
+            "CASE WHEN doc_id % 3 = 0 THEN text ELSE concat(text, "
+            "' contact user', CAST(doc_id AS STRING), '@mail', "
+            "CAST(doc_id % 7 AS STRING), '.com from 10.', "
+            "CAST(doc_id % 250 AS STRING), '.0.', "
+            "CAST(doc_id % 200 AS STRING), ' tel 555-867-', "
+            "lpad(CAST(doc_id % 10000 AS STRING), 4, '0')) END AS text")
+        return TX.pii_redact(aug, "text").selectExpr(
             "doc_id", "n_emails", "n_ipv4", "n_phones", "n_pii",
             "text_redacted")
 
     def q_dedup_exact(spark, sf):
-        docs = _docs(spark, sf).select("doc_id", "text")
+        docs = _docs(spark, sf).selectExpr("doc_id", "text")
         doubled = docs.unionByName(
-            docs.withColumn("doc_id", F.col("doc_id") + 1000000))
+            docs.selectExpr("doc_id + 1000000 AS doc_id", "text"))
         return DD.exact_dup_groups(doubled, "doc_id", "text")
 
     def q_ngram_jaccard(spark, sf):
@@ -1109,7 +1097,7 @@ def _llm_queries():
         return DD.ngram_jaccard_pairs(docs, "doc_id", "text", 3, 0.5)
 
     def q_minhash(spark, sf):
-        docs = _docs(spark, sf).filter(F.col("doc_id") < 100)
+        docs = _docs(spark, sf).filter("doc_id < 100")
         return DD.minhash_lsh_pairs(docs, "doc_id", "text",
                                     num_hashes=32, bands=8, threshold=0.4)
 
@@ -1145,9 +1133,9 @@ def _llm_queries():
 
     def q_topk(spark, sf):
         embs = _embs(spark, sf)
-        qvec = embs.filter(F.col("vec_id") == 0) \
-                   .select("embedding").first()["embedding"]
-        return SIM.cosine_topk(embs.filter(F.col("vec_id") > 0),
+        qvec = embs.filter("vec_id = 0").selectExpr("embedding") \
+                   .first()["embedding"]
+        return SIM.cosine_topk(embs.filter("vec_id > 0"),
                                "vec_id", "embedding", list(qvec), 10)
 
     def q_topk_ivf(spark, sf):
@@ -1520,7 +1508,7 @@ def _pipeline_queries():
         # perplexity = exp(-mean) amplifies the ln ulp by its own
         # magnitude, documented convenience column, not hash-gated
         return PL.lm_score(_docs(spark, sf), "doc_id", "text", k=1.0) \
-                 .select("doc_id", "n_bigrams", "mean_logprob")
+                 .selectExpr("doc_id", "n_bigrams", "mean_logprob")
 
     def q_remove_dup_spans_keep_first(spark, sf):
         # leave-one-copy variant (Lee et al.'s actual dedup semantics):
@@ -1543,7 +1531,7 @@ def _pipeline_queries():
         # physical paths (backoff LEFT joins vs denominator pre-join)
         # run in ONE query here.
         docs = _docs(spark, sf)
-        target = docs.filter(F.col("doc_id") % 5 == 0)
+        target = docs.filter("doc_id % 5 = 0")
         return PL.dsir_weights(docs, "doc_id", "text", target)
 
     return {
@@ -1737,8 +1725,8 @@ def _events_queries():
         e = events_table(spark, sf)
         return EV.sessionize(e, "user_id", "ts", _SESS_GAP,
                              order_cols=["event_id"]) \
-                 .select("event_id", "user_id", "ts", "event_type",
-                         "is_session_start", "session_seq")
+                 .selectExpr("event_id", "user_id", "ts", "event_type",
+                             "is_session_start", "session_seq")
 
     def q_session_stats(spark, sf):
         e = events_table(spark, sf)

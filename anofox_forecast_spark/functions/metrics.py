@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sqltext import dbl, q
+
 EPS = 2.220446049250313e-16  # f64::EPSILON, used by the reference
 
 def _nan() -> Column:
@@ -155,40 +157,53 @@ def _group_cols(df: DataFrame, *consumed: str) -> list[str]:
     return [c for c in df.columns if c not in consumed]
 
 
-def _grouped(df: DataFrame, group_cols: list[str], expr: Column) -> DataFrame:
+def _grouped(df: DataFrame, group_cols: list[str], expr: str) -> DataFrame:
+    agg = F.expr(f"{expr} AS metric_value")
     if group_cols:
-        return df.groupBy(*group_cols).agg(expr.alias("metric_value"))
-    return df.agg(expr.alias("metric_value"))
+        return df.groupBy(*group_cols).agg(agg)
+    return df.agg(agg)
+
+
+_NAN = dbl(float("nan"))
+_EPS = dbl(EPS)
+
+
+def _pinball(a: str, f: str, q: float) -> str:
+    """Pinball loss of one row, SQL text (``err * q`` or ``err * (q-1)``)."""
+    err = f"({a} - {f})"
+    return (f"CASE WHEN {err} >= 0 THEN {err} * {dbl(q)} "
+            f"ELSE {err} * {dbl(q - 1.0)} END")
 
 
 def _rowwise_metric(df: DataFrame, date_col: str, actual_col: str, forecast_col: str,
                     metric: str) -> DataFrame:
-    a = F.col(actual_col)
-    f = F.col(forecast_col)
+    a = q(actual_col)
+    f = q(forecast_col)
     gcols = _group_cols(df, date_col, actual_col, forecast_col)
     if metric == "mae":
-        expr = F.avg(F.abs(a - f))
+        expr = f"avg(abs({a} - {f}))"
     elif metric == "mse":
-        expr = F.avg((a - f) * (a - f))
+        expr = f"avg(({a} - {f}) * ({a} - {f}))"
     elif metric == "rmse":
-        expr = F.sqrt(F.avg((a - f) * (a - f)))
+        expr = f"sqrt(avg(({a} - {f}) * ({a} - {f})))"
     elif metric == "bias":
-        expr = F.avg(f - a)
-    elif metric == "mape":
-        keep = F.abs(a) > EPS
-        total = F.sum(F.when(keep, F.abs((a - f) / a)).otherwise(F.lit(0.0)))
-        n = F.sum(F.when(keep, 1).otherwise(0))
-        expr = F.when(n == 0, _nan()).otherwise(total / n * 100.0)
-    elif metric == "smape":
-        keep = (F.abs(a) + F.abs(f)) > EPS
-        total = F.sum(F.when(keep, 2.0 * F.abs(a - f) / (F.abs(a) + F.abs(f))).otherwise(F.lit(0.0)))
-        n = F.sum(F.when(keep, 1).otherwise(0))
-        expr = F.when(n == 0, _nan()).otherwise(total / n * 100.0)
+        expr = f"avg({f} - {a})"
+    elif metric in ("mape", "smape"):
+        if metric == "mape":
+            keep = f"abs({a}) > {_EPS}"
+            term = f"abs(({a} - {f}) / {a})"
+        else:
+            keep = f"(abs({a}) + abs({f})) > {_EPS}"
+            term = f"abs({a} - {f}) * 2.0D / (abs({a}) + abs({f}))"
+        total = f"sum(CASE WHEN {keep} THEN {term} ELSE 0.0D END)"
+        n = f"sum(CASE WHEN {keep} THEN 1 ELSE 0 END)"
+        expr = f"CASE WHEN {n} = 0 THEN {_NAN} ELSE {total} / {n} * 100.0D END"
     elif metric == "r2":
-        ss_res = F.sum((a - f) * (a - f))
-        mean = F.avg(a)
-        ss_tot = F.sum(a * a) - F.count(a) * mean * mean
-        expr = F.when(F.abs(ss_tot) < EPS, _nan()).otherwise(1.0 - ss_res / ss_tot)
+        ss_res = f"sum(({a} - {f}) * ({a} - {f}))"
+        mean = f"avg({a})"
+        ss_tot = f"(sum({a} * {a}) - count({a}) * {mean} * {mean})"
+        expr = (f"CASE WHEN abs({ss_tot}) < {_EPS} THEN {_NAN} "
+                f"ELSE 1.0D - {ss_res} / {ss_tot} END")
     else:
         raise ValueError(f"unknown metric {metric!r}")
     return _grouped(df, gcols, expr)
@@ -222,24 +237,26 @@ def ts_bias_by(df, date_col, actual_col, forecast_col):
     return _rowwise_metric(df, date_col, actual_col, forecast_col, "bias")
 
 
+def _mae_ratio_by(df: DataFrame, gcols: list[str], a: str, p1: str,
+                  p2: str) -> DataFrame:
+    m1 = f"avg(abs({a} - {p1}))"
+    m2 = f"avg(abs({a} - {p2}))"
+    return _grouped(df, gcols, f"CASE WHEN abs({m2}) < {_EPS} THEN {_NAN} "
+                               f"ELSE {m1} / {m2} END")
+
+
 def ts_mase_by(df: DataFrame, date_col: str, actual_col: str, forecast_col: str,
                baseline_col: str) -> DataFrame:
-    a, f, b = F.col(actual_col), F.col(forecast_col), F.col(baseline_col)
     gcols = _group_cols(df, date_col, actual_col, forecast_col, baseline_col)
-    fmae = F.avg(F.abs(a - f))
-    bmae = F.avg(F.abs(a - b))
-    expr = F.when(F.abs(bmae) < EPS, _nan()).otherwise(fmae / bmae)
-    return _grouped(df, gcols, expr)
+    return _mae_ratio_by(df, gcols, q(actual_col), q(forecast_col),
+                         q(baseline_col))
 
 
 def ts_rmae_by(df: DataFrame, date_col: str, actual_col: str, pred1_col: str,
                pred2_col: str) -> DataFrame:
-    a, p1, p2 = F.col(actual_col), F.col(pred1_col), F.col(pred2_col)
     gcols = _group_cols(df, date_col, actual_col, pred1_col, pred2_col)
-    m1 = F.avg(F.abs(a - p1))
-    m2 = F.avg(F.abs(a - p2))
-    expr = F.when(F.abs(m2) < EPS, _nan()).otherwise(m1 / m2)
-    return _grouped(df, gcols, expr)
+    return _mae_ratio_by(df, gcols, q(actual_col), q(pred1_col),
+                         q(pred2_col))
 
 
 def ts_mqloss_by(df: DataFrame, date_col: str, actual_col: str,
@@ -251,37 +268,29 @@ def ts_mqloss_by(df: DataFrame, date_col: str, actual_col: str,
         raise ValueError("forecast_cols and quantiles must have equal length")
     if not forecast_cols:
         raise ValueError("at least one (forecast_col, quantile) pair required")
-    for q in quantiles:
-        if not (0.0 <= float(q) <= 1.0):
+    for qt in quantiles:
+        if not (0.0 <= float(qt) <= 1.0):
             raise ValueError("Quantile must be between 0 and 1")
-    a = F.col(actual_col)
     gcols = _group_cols(df, date_col, actual_col, *forecast_cols)
-    per_q = []
-    for c, q in zip(forecast_cols, quantiles):
-        q = float(q)
-        err = a - F.col(c)
-        per_q.append(F.avg(F.when(err >= 0, q * err).otherwise((q - 1.0) * err)))
-    total = per_q[0]
-    for e in per_q[1:]:
-        total = total + e
-    return _grouped(df, gcols, total / float(len(per_q)))
+    total = " + ".join(f"avg({_pinball(q(actual_col), q(c), float(qt))})"
+                       for c, qt in zip(forecast_cols, quantiles))
+    return _grouped(df, gcols,
+                    f"({total}) / {dbl(float(len(forecast_cols)))}")
 
 
 def ts_coverage_by(df: DataFrame, date_col: str, actual_col: str, lower_col: str,
                    upper_col: str) -> DataFrame:
-    a, lo, up = F.col(actual_col), F.col(lower_col), F.col(upper_col)
+    a, lo, up = q(actual_col), q(lower_col), q(upper_col)
     gcols = _group_cols(df, date_col, actual_col, lower_col, upper_col)
-    expr = F.avg(F.when((a >= lo) & (a <= up), 1.0).otherwise(0.0))
-    return _grouped(df, gcols, expr)
+    return _grouped(df, gcols, f"avg(CASE WHEN {a} >= {lo} AND {a} <= {up} "
+                               "THEN 1.0D ELSE 0.0D END)")
 
 
 def ts_quantile_loss_by(df: DataFrame, date_col: str, actual_col: str, forecast_col: str,
                         quantile: float) -> DataFrame:
-    a, f = F.col(actual_col), F.col(forecast_col)
-    q = float(quantile)
-    if not (0.0 <= q <= 1.0):
+    qt = float(quantile)
+    if not (0.0 <= qt <= 1.0):
         raise ValueError("Quantile must be between 0 and 1")
     gcols = _group_cols(df, date_col, actual_col, forecast_col)
-    err = a - f
-    expr = F.avg(F.when(err >= 0, q * err).otherwise((q - 1.0) * err))
-    return _grouped(df, gcols, expr)
+    return _grouped(df, gcols,
+                    f"avg({_pinball(q(actual_col), q(forecast_col), qt)})")

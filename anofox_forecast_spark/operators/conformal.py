@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sqltext import dbl, q
+
 # ---------------------------------------------------------------------------
 # Column helpers
 # ---------------------------------------------------------------------------
@@ -41,6 +43,26 @@ def _interp_quantile(sorted_arr: Column, level: Column) -> Column:
     return F.when(n == 0, F.lit(float("nan"))) \
             .when(n == 1, F.element_at(sorted_arr, 1)) \
             .otherwise(at_lo * (1.0 - frac) + at_hi * frac)
+
+
+def _interp_quantile_sql(arr: str, level: str) -> str:
+    """SQL-text form of :func:`_interp_quantile` over the array column
+    ``arr`` at the SQL expression ``level``."""
+    n = f"size({arr})"
+    idx = f"({level} * (CAST({n} AS DOUBLE) - 1.0D))"
+    lo = f"CAST(FLOOR({idx}) AS INT)"
+    frac = f"({idx} - CAST({lo} AS DOUBLE))"
+    return (f"CASE WHEN {n} = 0 THEN {dbl(float('nan'))} "
+            f"WHEN {n} = 1 THEN element_at({arr}, 1) "
+            f"ELSE element_at({arr}, {lo} + 1) * (1.0D - {frac}) + "
+            f"element_at({arr}, least({lo} + 2, {n})) * {frac} END")
+
+
+def _corrected_level_sql(arr: str, a: float) -> str:
+    """Finite-sample corrected level clamp(ceil((n+1)(1-a))/n, 0, 1)."""
+    n = f"CAST(size({arr}) AS DOUBLE)"
+    return (f"least(greatest(CEIL(({n} + 1.0D) * {dbl(1.0 - a)}) / {n}, "
+            "0.0D), 1.0D)")
 
 
 def ts_conformal_quantile(residuals: Column, alpha: float) -> Column:
@@ -144,13 +166,12 @@ def ts_conformal_by(df: DataFrame, group_col: str, actual_col: str,
     p = dict(params or {})
     alpha = float(p.get("alpha", 0.1))
     method = str(p.get("method", "symmetric"))
-    base = df.filter(F.col(actual_col).isNotNull() & F.col(forecast_col).isNotNull())
-    res = (F.col(actual_col) - F.col(forecast_col)).cast("double")
+    a, f = q(actual_col), q(forecast_col)
+    base = df.filter(f"{a} IS NOT NULL AND {f} IS NOT NULL")
     agg = base.groupBy(group_col).agg(
-        F.collect_list(res).alias("__res"),
-        F.sort_array(F.collect_list(F.col(point_forecast_col).cast("double")))
-         .alias("point"),
-    )
+        F.expr(f"collect_list(CAST({a} - {f} AS DOUBLE)) AS __res"),
+        F.expr(f"sort_array(collect_list(CAST({q(point_forecast_col)} "
+               "AS DOUBLE))) AS point"))
     # r13 CSE fix (both branches): the correction margins are projected as
     # columns BEFORE the interval transforms — an inline margin expression
     # (sort + quantile interpolation over the residual array) referenced
@@ -160,49 +181,36 @@ def ts_conformal_by(df: DataFrame, group_col: str, actual_col: str,
     if method == "asymmetric":
         a2 = alpha / 2.0
 
-        def corrected(arr):
-            n = F.size(arr).cast("double")
-            lv = F.least(F.greatest(F.ceil((n + 1.0) * (1.0 - a2)) / n, F.lit(0.0)),
-                         F.lit(1.0))
-            return F.when(F.size(arr) == 0, F.lit(0.0)) \
-                    .otherwise(_interp_quantile(arr, lv))
+        def corrected(arr: str) -> str:
+            return (f"CASE WHEN size({arr}) = 0 THEN 0.0D ELSE "
+                    f"{_interp_quantile_sql(arr, _corrected_level_sql(arr, a2))}"
+                    " END")
 
-        sorted_ = agg.withColumn(
-            "__pos", F.sort_array(F.filter(F.col("__res"), lambda r: r > 0))
-        ).withColumn(
-            "__neg", F.sort_array(F.transform(
-                F.filter(F.col("__res"), lambda r: r < 0),
-                lambda r: F.abs(r))))
-        margins = sorted_.withColumn("__up", corrected(F.col("__pos"))) \
-                         .withColumn("__lo", corrected(F.col("__neg")))
-        lo_m, up_m = F.col("__lo"), F.col("__up")
-        out = margins.select(
-            group_col, "point",
-            F.transform(F.col("point"), lambda f: f - lo_m).alias("lower"),
-            F.transform(F.col("point"), lambda f: f + up_m).alias("upper"),
-            F.lit(1.0 - alpha).alias("coverage"),
-            ((lo_m + up_m) / 2.0).alias("conformity_score"),
-            F.lit("asymmetric_conformal").alias("method"),
-        )
+        margins = (agg
+                   .withColumn("__pos", F.expr(
+                       "sort_array(filter(__res, x -> x > 0))"))
+                   .withColumn("__neg", F.expr(
+                       "sort_array(transform(filter(__res, x -> x < 0), "
+                       "x -> abs(x)))"))
+                   .withColumn("__up", F.expr(corrected("__pos")))
+                   .withColumn("__lo", F.expr(corrected("__neg"))))
+        lower, upper = "x - __lo", "x + __up"
+        score, label = "(__lo + __up) / 2.0D", "asymmetric_conformal"
     else:
-        scored = agg.withColumn(
-            "__sres",
-            F.sort_array(F.transform(F.col("__res"), lambda r: F.abs(r))))
-        n = F.size("__sres").cast("double")
-        level = F.least(F.greatest(
-            F.ceil((n + 1.0) * (1.0 - alpha)) / n, F.lit(0.0)), F.lit(1.0))
-        scored = scored.withColumn(
-            "__score", _interp_quantile(F.col("__sres"), level))
-        score = F.col("__score")
-        out = scored.select(
-            group_col, "point",
-            F.transform(F.col("point"), lambda f: f - score).alias("lower"),
-            F.transform(F.col("point"), lambda f: f + score).alias("upper"),
-            F.lit(1.0 - alpha).alias("coverage"),
-            score.alias("conformity_score"),
-            F.lit("split_conformal").alias("method"),
-        )
-    return out
+        margins = (agg
+                   .withColumn("__sres", F.expr(
+                       "sort_array(transform(__res, x -> abs(x)))"))
+                   .withColumn("__score", F.expr(_interp_quantile_sql(
+                       "__sres", _corrected_level_sql("__sres", alpha)))))
+        lower, upper = "x - __score", "x + __score"
+        score, label = "__score", "split_conformal"
+    return margins.selectExpr(
+        q(group_col), "point",
+        f"transform(point, x -> {lower}) AS lower",
+        f"transform(point, x -> {upper}) AS upper",
+        f"{dbl(1.0 - alpha)} AS coverage",
+        f"{score} AS conformity_score",
+        f"'{label}' AS method")
 
 
 def ts_conformal_apply_by(df: DataFrame, group_col: str, forecast_col: str,

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..frequency import parse_frequency
+from ..sqltext import q
 from ..functions import models as M
 
 
@@ -47,37 +48,35 @@ def _fold_params(params: dict | None) -> dict:
 
 
 def _fold_bounds(n_folds: int, horizon: int, p: dict):
-    """Fold boundary expressions over ``__n`` (group length) and
+    """Fold boundary SQL-text expressions over ``__n`` (group length) and
     ``fold_id`` columns, mirroring ComputeFoldBoundaries. Returns
     ``(train_start, train_end, test_start, test_end, valid)``."""
     h = int(horizon)
     skip = p["skip_length"] if p["skip_length"] > 0 else h
     gap, embargo, min_train = p["gap"], p["embargo"], p["min_train_size"]
-    n = F.col("__n")
-    f = F.col("fold_id")
     if p["initial_train_size"] > 0:
-        init = F.lit(p["initial_train_size"])
+        init = str(p["initial_train_size"])
     else:
-        init = F.greatest(n - F.lit(h * int(n_folds)), F.lit(1))
-    train_end = init - 1 + f * skip
-    test_start = train_end + 1 + gap
-    test_end_raw = test_start + h - 1
+        init = f"greatest(__n - {h * int(n_folds)}, 1)"
+    train_end = f"({init} - 1 + fold_id * {skip})"
+    test_start = f"({train_end} + 1 + {gap})"
+    test_end_raw = f"({test_start} + {h} - 1)"
     if p["clip_horizon"]:
-        test_end = F.least(test_end_raw, n - 1)
-        valid = test_start < n
+        test_end = f"least({test_end_raw}, __n - 1)"
+        valid = f"{test_start} < __n"
     else:
         test_end = test_end_raw
-        valid = test_end_raw < n
+        valid = f"{test_end_raw} < __n"
     if p["window_type"] == "expanding":
-        train_start = F.lit(0)
+        train_start = "0"
     else:
-        train_start = F.greatest(train_end + 1 - min_train, F.lit(0))
+        train_start = f"greatest({train_end} + 1 - {min_train}, 0)"
     if embargo > 0:
-        prev_test_end = init - 1 + (f - 1) * skip + gap + h
+        prev_test_end = f"({init} - 1 + (fold_id - 1) * {skip} + {gap} + {h})"
         if p["clip_horizon"]:
-            prev_test_end = F.least(prev_test_end, n - 1)
-        train_start = F.when(f > 0, F.greatest(train_start, prev_test_end + 1 + embargo)) \
-                       .otherwise(train_start)
+            prev_test_end = f"least({prev_test_end}, __n - 1)"
+        train_start = (f"CASE WHEN fold_id > 0 THEN greatest({train_start}, "
+                       f"{prev_test_end} + 1 + {embargo}) ELSE {train_start} END")
     return train_start, train_end, test_start, test_end, valid
 
 
@@ -99,31 +98,28 @@ def ts_cv_folds_by(df: DataFrame, group_col: str, ds_col: str, y_col: str,
     conjunctions.
     """
     p = _fold_params(params)
-    base = df.select(group_col, ds_col, y_col)
-    w = Window.partitionBy(group_col).orderBy(ds_col)
-    wn = Window.partitionBy(group_col)
-    rows = (base.withColumn("__pos", F.row_number().over(w) - 1)
-                .withColumn("__n", F.count(F.lit(1)).over(wn)))
+    g, ds, y = q(group_col), q(ds_col), q(y_col)
+    rows = (df.selectExpr(g, ds, y)
+              .withColumn("__pos", F.expr(
+                  f"row_number() OVER (PARTITION BY {g} ORDER BY {ds}) - 1"))
+              .withColumn("__n", F.expr(f"count(1) OVER (PARTITION BY {g})")))
     train_start, train_end, test_start, test_end, valid = \
         _fold_bounds(n_folds, horizon, p)
-    joined = (rows.select(
-        "*", F.explode(F.sequence(F.lit(0), F.lit(int(n_folds) - 1)))
-              .alias("fold_id"))
-        .withColumn("__train_start", train_start)
-        .withColumn("__train_end", train_end)
-        .withColumn("__test_start", test_start)
-        .withColumn("__test_end", test_end)
+    joined = (rows.selectExpr(
+        "*", f"explode(sequence(0, {int(n_folds) - 1})) AS fold_id")
+        .selectExpr("*", f"{train_start} AS __train_start",
+                    f"{train_end} AS __train_end",
+                    f"{test_start} AS __test_start",
+                    f"{test_end} AS __test_end")
         .filter(valid)
-        .filter(F.col("__train_end") >= F.col("__train_start")))
-    pos = F.col("__pos")
-    split = (F.when((pos >= F.col("__train_start")) & (pos <= F.col("__train_end")),
-                    F.lit("train"))
-              .when((pos >= F.col("__test_start")) & (pos <= F.col("__test_end")),
-                    F.lit("test")))
-    return (joined.withColumn("split", split)
-            .filter(F.col("split").isNotNull())
-            .select(group_col, ds_col, y_col,
-                    F.col("fold_id").cast("long").alias("fold_id"), "split"))
+        .filter("__train_end >= __train_start"))
+    split = ("CASE WHEN __pos >= __train_start AND __pos <= __train_end "
+             "THEN 'train' WHEN __pos >= __test_start AND __pos <= __test_end "
+             "THEN 'test' END")
+    return (joined.selectExpr("*", f"{split} AS split")
+            .filter("split IS NOT NULL")
+            .selectExpr(g, ds, y, "CAST(fold_id AS BIGINT) AS fold_id",
+                        "split"))
 
 
 def ts_cv_split_folds_by(df: DataFrame, group_col: str, ds_col: str,

@@ -26,7 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .text import normalize_text
+from ..sqltext import dbl, q
+from .text import normalize_text, normalize_text_sql
 
 
 # ---------------------------------------------------------------------------
@@ -49,12 +50,12 @@ def dedup_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 def exact_dup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Duplicate-group report: (fingerprint, dup_count, keep_id) for groups
     with more than one member."""
-    fp = F.md5(normalize_text(F.col(text_col)))
+    fp = F.expr(f"md5({normalize_text_sql(q(text_col))})")
     return (df.withColumn("fingerprint", fp)
               .groupBy("fingerprint")
-              .agg(F.count(F.lit(1)).alias("dup_count"),
-                   F.min(id_col).alias("keep_id"))
-              .filter(F.col("dup_count") > 1))
+              .agg(F.expr("count(1) AS dup_count"),
+                   F.expr(f"min({q(id_col)}) AS keep_id"))
+              .filter("dup_count > 1"))
 
 
 def exact_dedup_keep_best(df: DataFrame, id_col: str, text_col: str,
@@ -113,14 +114,12 @@ def _shingle_df(df: DataFrame, id_col: str, text_col: str, n: int):
     # fix): an expression referenced inside a higher-order-function
     # lambda is re-evaluated per array element, so the regex normalize
     # ran once per shingle POSITION instead of once per document
-    norm = df.select(F.col(id_col).alias("__id"),
-                     normalize_text(F.col(text_col)).alias("__norm"))
-    nc = F.col("__norm")
-    sh = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(nc) - (n - 1), F.lit(1))),
-            lambda i: nc.substr(i, F.lit(n))))
-    return norm.select("__id", sh.alias("__sh"))
+    norm = df.selectExpr(f"{q(id_col)} AS __id",
+                         f"{normalize_text_sql(q(text_col))} AS __norm")
+    return norm.selectExpr(
+        "__id",
+        f"array_distinct(transform(sequence(1, greatest(length(__norm) - "
+        f"{n - 1}, 1)), x -> substr(__norm, x, {n}))) AS __sh")
 
 
 # ---------------------------------------------------------------------------
@@ -228,7 +227,6 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
     if num_hashes % bands != 0:
         raise ValueError("num_hashes must be divisible by bands")
     r = num_hashes // bands
-    band_hash = F.md5 if hash_fn == "md5" else F.xxhash64
     sh = _shingle_df(df, id_col, text_col, shingle_n)
     # r14 (§4/§7): the per-salt `array_min(transform(...))` signature is
     # INTERPRETED — num_hashes × |shingles| lambda evaluations per doc
@@ -240,18 +238,18 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
     # signature exactly like array_min over an empty array. (The scalar
     # `minhash_signature` Column helper keeps the HOF form for arbitrary
     # array expressions.)
-    def _salted(i: int) -> Column:
+    def _salted(i: int) -> str:
         if hash_fn == "md5":
-            return F.md5(F.concat(F.col("__s"), F.lit(f":{i}")))
-        return F.xxhash64(F.col("__s"), F.lit(i))
+            return f"md5(concat(__s, ':{i}'))"
+        return f"xxhash64(__s, {i})"
 
-    sig = (sh.select("__id", F.explode_outer("__sh").alias("__s"))
+    # one aggregate expression builds the signature array: the Project
+    # over the num_hashes MIN aggregates collapses into the Aggregate's
+    # result expressions, the same plan as one alias per minimum
+    mins = ", ".join(f"min({_salted(i)})" for i in range(num_hashes))
+    sig = (sh.selectExpr("__id", "explode_outer(__sh) AS __s")
              .groupBy("__id")
-             .agg(*[F.min(_salted(i)).alias(f"__m{i}")
-                    for i in range(num_hashes)])
-             .select("__id", F.array(*[F.col(f"__m{i}")
-                                       for i in range(num_hashes)])
-                      .alias("__sig")))
+             .agg(F.expr(f"array({mins}) AS __sig")))
     # band keys: hash of each signature slice. The explode multiplies row
     # count x bands (16x), so it carries only (id, sig, band, key): the
     # fixed-width 64-long signature rides along (it is needed for
@@ -262,47 +260,44 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
     # for verification. Carrying shingles through the explode was the 16x
     # shuffle-payload amplification flagged at 100 TB scale; re-shingling
     # for the verify joins is one cheap string pass, not 64 hashes.
-    band_rows = sig.select(
+    band_hash = "md5" if hash_fn == "md5" else "xxhash64"
+
+    def _band(b: int) -> str:
+        parts = ", ".join(f"CAST(element_at(__sig, {b * r + j + 1}) AS STRING)"
+                          for j in range(r))
+        return f"struct({b} AS band, {band_hash}(concat_ws(',', {parts})) AS key)"
+
+    band_rows = (sig.selectExpr(
         "__id", "__sig",
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"),
-                     band_hash(F.concat_ws(",", *[
-                         F.element_at(F.col("__sig"), b * r + j + 1).cast("string")
-                         for j in range(r)])).alias("key"))
-            for b in range(bands)])).alias("__b"))
-    band_rows = band_rows.select("__id", "__sig",
-                                 F.col("__b.band").alias("__band"),
-                                 F.col("__b.key").alias("__key"))
+        f"explode(array({', '.join(_band(b) for b in range(bands))})) AS __b")
+        .selectExpr("__id", "__sig", "__b.band AS __band", "__b.key AS __key"))
     if max_bucket_size is not None:
         ok = (band_rows.groupBy("__band", "__key")
-              .agg(F.count(F.lit(1)).alias("__bs"))
-              .filter(F.col("__bs") <= int(max_bucket_size))
+              .agg(F.expr("count(1) AS __bs"))
+              .filter(f"__bs <= {int(max_bucket_size)}")
               .select("__band", "__key"))
         # same join key as the self-join below -> shuffle reuse
         band_rows = band_rows.join(ok, ["__band", "__key"])
-    left = band_rows.select(F.col("__id").alias("id_a"),
-                            F.col("__sig").alias("__sig_a"), "__band", "__key")
-    right = band_rows.select(F.col("__id").alias("id_b"),
-                             F.col("__sig").alias("__sig_b"), "__band", "__key")
+    left = band_rows.selectExpr("__id AS id_a", "__sig AS __sig_a", "__band",
+                                "__key")
+    right = band_rows.selectExpr("__id AS id_b", "__sig AS __sig_b", "__band",
+                                 "__key")
     cands = (left.join(right, ["__band", "__key"])
-             .filter(F.col("id_a") < F.col("id_b"))
-             .select("id_a", "id_b", "__sig_a", "__sig_b")
+             .filter("id_a < id_b")
+             .selectExpr("id_a", "id_b", "__sig_a", "__sig_b")
              .dropDuplicates(["id_a", "id_b"]))
     cands = (cands
-             .join(sh.select(F.col("__id").alias("id_a"),
-                             F.col("__sh").alias("__sh_a")), "id_a")
-             .join(sh.select(F.col("__id").alias("id_b"),
-                             F.col("__sh").alias("__sh_b")), "id_b"))
-    est = (F.size(F.filter(F.zip_with(F.col("__sig_a"), F.col("__sig_b"),
-                                      lambda x, y: (x == y).cast("int")),
-                           lambda v: v == 1)).cast("double") / num_hashes)
-    inter = F.size(F.array_intersect(F.col("__sh_a"), F.col("__sh_b")))
-    union = (F.size(F.col("__sh_a")) + F.size(F.col("__sh_b")) - inter)
-    out = (cands.withColumn("est_jaccard", est)
-           .withColumn("jaccard", inter.cast("double") / union)
-           .filter(F.col("jaccard") >= float(threshold))
-           .select("id_a", "id_b", "est_jaccard", "jaccard"))
-    return out
+             .join(sh.selectExpr("__id AS id_a", "__sh AS __sh_a"), "id_a")
+             .join(sh.selectExpr("__id AS id_b", "__sh AS __sh_b"), "id_b"))
+    est = ("CAST(size(filter(zip_with(__sig_a, __sig_b, "
+           "(x, y) -> CAST(x = y AS INT)), x -> x = 1)) AS DOUBLE) "
+           f"/ {num_hashes}")
+    inter = "size(array_intersect(__sh_a, __sh_b))"
+    union = f"size(__sh_a) + size(__sh_b) - {inter}"
+    return (cands.selectExpr("*", f"{est} AS est_jaccard",
+                             f"CAST({inter} AS DOUBLE) / ({union}) AS jaccard")
+            .filter(f"jaccard >= {dbl(threshold)}")
+            .selectExpr("id_a", "id_b", "est_jaccard", "jaccard"))
 
 
 def minhash_lsh_dedup(df: DataFrame, id_col: str, text_col: str,

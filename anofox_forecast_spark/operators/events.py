@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sqltext import q
+
 
 def _us(col: Column) -> Column:
     """Exact epoch microseconds for TIMESTAMP **or** TIMESTAMP_NTZ input
@@ -49,17 +51,17 @@ def sessionize(df: DataFrame, key_col: str, ts_col: str,
     timestamp alone — pass an event id when keys can emit simultaneous
     events).
     """
-    order = [F.col(ts_col)] + [F.col(c) for c in (order_cols or [])]
-    w = Window.partitionBy(key_col).orderBy(*order)
+    order = ", ".join(q(c) for c in [ts_col, *(order_cols or [])])
+    w = f"PARTITION BY {q(key_col)} ORDER BY {order}"
     gap_us = int(round(float(gap_seconds) * 1_000_000))
-    prev = F.lag(F.col(ts_col)).over(w)
-    is_new = (prev.isNull()
-              | ((_us(F.col(ts_col)) - _us(prev)) > F.lit(gap_us)))
-    wrun = w.rowsBetween(Window.unboundedPreceding, 0)
-    return (df.withColumn("is_session_start", is_new)
-              .withColumn("session_seq",
-                          F.sum(F.col("is_session_start").cast("long"))
-                           .over(wrun)))
+    t = q(ts_col)
+    prev = f"lag({t}) OVER ({w})"
+    is_new = (f"{prev} IS NULL OR (unix_micros(CAST({t} AS TIMESTAMP)) - "
+              f"unix_micros(CAST({prev} AS TIMESTAMP))) > {gap_us}")
+    run = (f"sum(CAST(is_session_start AS BIGINT)) OVER ({w} "
+           "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)")
+    return (df.withColumn("is_session_start", F.expr(is_new))
+              .withColumn("session_seq", F.expr(run)))
 
 
 def session_stats(df: DataFrame, key_col: str, ts_col: str,

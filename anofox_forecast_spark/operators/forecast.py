@@ -35,6 +35,7 @@ from pyspark.sql import types as T
 
 from ..frequency import Frequency, parse_frequency
 from ..sources import NO_NAN_METADATA
+from ..sqltext import dbl, q
 from ..functions import models as M
 from ..functions.batched import (batched_grouped_map, partition_floor,
                                  shuffle_partitions)
@@ -50,11 +51,6 @@ FORECAST_FIELDS = [
 
 def _z(level: float) -> float:
     return M.norm_ppf(0.5 + level / 2.0)
-
-
-def _q(name: str) -> str:
-    """Backtick-quote an identifier for SQL-text expressions."""
-    return "`" + name.replace("`", "``") + "`"
 
 
 def _future_ds_sql(max_ds: str, step: str, freq: Frequency,
@@ -215,7 +211,7 @@ def _forecast_sql(df: DataFrame, group_col: str, ds_col: str, y_col: str,
     window = int(params.get("window", 5 if model == "SMA" else 2))
     ds_type = df.schema[ds_col].dataType
 
-    qg, qds, qy = _q(group_col), _q(ds_col), _q(y_col)
+    qg, qds, qy = q(group_col), q(ds_col), q(y_col)
     # the producer's no-NaN witness must be read from the INPUT schema:
     # the CAST below is a plain expression, and Catalyst only propagates
     # column metadata through a bare attribute alias
@@ -401,8 +397,8 @@ def _ses_sql(base: DataFrame, group_col: str, ds_col: str, y_col: str,
     numpy-vs-DuckDB pairing already rode).
     """
     a = float(alpha)
-    A, B = _dbl(a), _dbl(1.0 - a)
-    A2 = _dbl(a * a)
+    A, B = dbl(a), dbl(1.0 - a)
+    A2 = dbl(a * a)
     agg = _sorted_ys_agg(base, group_col, ds_col, y_col)
 
     # ONE fold directly over __ys carrying (prev = y[t], f = fitted
@@ -446,12 +442,6 @@ def _ses_sql(base: DataFrame, group_col: str, ds_col: str, y_col: str,
                               "__level", width, "SES")
 
 
-def _dbl(x: float) -> str:
-    """Full-precision double literal (strtod is correctly rounded, so the
-    bits match ``F.lit(x)``; bare ``0.3`` would parse as DECIMAL)."""
-    return f"CAST('{float(x)!r}' AS DOUBLE)"
-
-
 def _sorted_ys_agg(base: DataFrame, group_col: str, ds_col: str,
                    y_col: str):
     """Per-series ds-ordered value array + max_ds + n, validity-filtered —
@@ -465,7 +455,7 @@ def _sorted_ys_agg(base: DataFrame, group_col: str, ds_col: str,
     folds fabricate forecasts (Croston/TSB yhat=0.0, SES NULL rows) for
     series the model-library path skips via per-series error isolation
     (r10 ADVICE finding, reproduced)."""
-    qds, qy = _q(ds_col), _q(y_col)
+    qds, qy = q(ds_col), q(y_col)
     # CPU-bound JVM fold stage: floor the partition count at the core
     # count (batched.partition_floor — the same starvation the Python
     # stages had: a bare groupBy inherits spark.sql.shuffle.partitions,
@@ -503,9 +493,9 @@ def _fold_forecast_out(agg: DataFrame, group_col: str, ds_col: str, h: int,
     steps = agg.selectExpr("*", f"explode(sequence(1, {h})) AS forecast_step")
     out_ds = _future_ds_sql("__max_ds", "forecast_step", freq, ds_type)
     return steps.selectExpr(
-        _q(group_col),
+        q(group_col),
         "CAST(forecast_step AS INT) AS forecast_step",
-        f"{out_ds} AS {_q(ds_col)}",
+        f"{out_ds} AS {q(ds_col)}",
         f"CAST({yhat} AS DOUBLE) AS yhat",
         f"CAST(({yhat}) - ({width}) AS DOUBLE) AS yhat_lower",
         f"CAST(({yhat}) + ({width}) AS DOUBLE) AS yhat_upper",
@@ -542,7 +532,7 @@ def _croston_sql(base: DataFrame, group_col: str, ds_col: str, y_col: str,
     ``1 - alpha/2``; an all-zero series forecasts 0 with zero-width
     intervals, exactly the model path's degenerate branch)."""
     alpha = 0.1
-    A, B = _dbl(alpha), _dbl(1.0 - alpha)
+    A, B = dbl(alpha), dbl(1.0 - alpha)
     agg = _sorted_ys_agg(base, group_col, ds_col, y_col)
     # 1-indexed positions of the non-zero demands; sizes at those
     # positions; intervals = first position, then successive diffs
@@ -559,7 +549,7 @@ def _croston_sql(base: DataFrame, group_col: str, ds_col: str, y_col: str,
            f"(acc, x) -> {A} * x + {B} * acc) END")
     rate = "CASE WHEN __p != 0.0D THEN __z / __p ELSE 0.0D END"
     if model == "CrostonSBA":
-        rate = f"({rate}) * {_dbl(1.0 - alpha / 2.0)}"
+        rate = f"({rate}) * {dbl(1.0 - alpha / 2.0)}"
     agg = agg.selectExpr(
         "*",
         "filter(sequence(1, CAST(__n AS INT)), "
@@ -589,8 +579,8 @@ def _tsb_sql(base: DataFrame, group_col: str, ds_col: str, y_col: str,
     carrying (p, z) plus the Welford residual stats over the pre-update
     fitted ``p*z`` (``models._tsb`` semantics, including the
     mean-of-nonzero size seed when the series opens with a zero)."""
-    Ad, Bd = _dbl(alpha_d), _dbl(1.0 - alpha_d)
-    Ap, Bp = _dbl(alpha_p), _dbl(1.0 - alpha_p)
+    Ad, Bd = dbl(alpha_d), dbl(1.0 - alpha_d)
+    Ap, Bp = dbl(alpha_p), dbl(1.0 - alpha_p)
     agg = _sorted_ys_agg(base, group_col, ds_col, y_col)
     nz = "filter(__ys, v -> v != 0.0D)"
     z0 = (f"CASE WHEN element_at(__ys, 1) != 0.0D THEN element_at(__ys, 1) "
@@ -629,9 +619,9 @@ def _holt_sql(base: DataFrame, group_col: str, ds_col: str, y_col: str,
     class — far inside the 4-decimal contract pin."""
     a, b = float(alpha), float(beta)
     ph = float(phi) if damped else 1.0
-    A, Bc = _dbl(a), _dbl(1.0 - a)
-    Bb, PH = _dbl(b), _dbl(ph)
-    C = _dbl((1.0 - b) * ph)
+    A, Bc = dbl(a), dbl(1.0 - a)
+    Bb, PH = dbl(b), dbl(ph)
+    C = dbl((1.0 - b) * ph)
     agg = _sorted_ys_agg(base, group_col, ds_col, y_col)
     # fold over y[2..n]: f = level + ph*trend (the one-step fit), then
     # newl = a*x + (1-a)*f; trend' = b*(newl-level)*ph + ((1-b)*ph)*trend
@@ -687,8 +677,8 @@ def _seasonal_es_sql(base: DataFrame, group_col: str, ds_col: str,
     nanmean."""
     if m < 1:
         raise ValueError("SeasonalES requires seasonal_period >= 1")
-    A, B = _dbl(alpha), _dbl(1.0 - alpha)
-    A2 = _dbl(alpha * alpha)
+    A, B = dbl(alpha), dbl(1.0 - alpha)
+    A2 = dbl(alpha * alpha)
     agg = _sorted_ys_agg(base, group_col, ds_col, y_col)
     # phase of 1-indexed position i is (i-1) % m + 1 into the slot array
     phx = f"(CAST((s.i - 1) % {m} AS INT) + 1)"

@@ -20,6 +20,8 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sqltext import q, sql_str
+
 DEFAULT_SEPARATOR = "|"
 DEFAULT_KEYWORD = "AGGREGATED"
 
@@ -69,21 +71,17 @@ def ts_aggregate_hierarchy(df: DataFrame, id_cols: list[str], ds_col: str,
     """
     # grouping sets: every id-prefix level, always keeping ds —
     # (id1..idN, ds), (id1..idN-1, ds), ..., (ds)
-    sets = [[F.col(c) for c in id_cols[:k]] + [F.col(ds_col)]
-            for k in range(len(id_cols), -1, -1)]
-    rolled = (df.groupingSets(sets, *[F.col(c) for c in id_cols], F.col(ds_col))
-                .agg(F.sum(F.col(y_col).cast("double")).alias("__y"),
-                     *[F.grouping(c).alias(f"__g_{c}") for c in id_cols]))
-    parts = [
-        F.when(F.col(f"__g_{c}") == 1, F.lit(aggregate_keyword))
-         .otherwise(F.col(c).cast("string"))
-        for c in id_cols
-    ]
-    return rolled.select(
-        F.concat_ws(separator, *parts).alias("unique_id"),
-        F.col(ds_col),
-        F.col("__y").alias(y_col),
-    )
+    sets = [[*id_cols[:k], ds_col] for k in range(len(id_cols), -1, -1)]
+    rolled = (df.groupingSets(sets, *id_cols, ds_col)
+                .agg(F.expr(f"sum(CAST({q(y_col)} AS DOUBLE)) AS __y"),
+                     *[F.expr(f"grouping({q(c)}) AS {q('__g_' + c)}")
+                       for c in id_cols]))
+    parts = ", ".join(
+        f"CASE WHEN {q('__g_' + c)} = 1 THEN {sql_str(aggregate_keyword)} "
+        f"ELSE CAST({q(c)} AS STRING) END" for c in id_cols)
+    return rolled.selectExpr(
+        f"concat_ws({sql_str(separator)}, {parts}) AS unique_id",
+        q(ds_col), f"__y AS {q(y_col)}")
 
 
 def ts_split_keys(df: DataFrame, unique_id_col: str, ds_col: str, y_col: str,

@@ -44,7 +44,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .text import token_count
+from ..sqltext import dbl, q
+from .text import _WS_SQL, token_count
 
 HEX = "0123456789abcdef"
 
@@ -53,20 +54,21 @@ HEX = "0123456789abcdef"
 # shared helpers
 # ---------------------------------------------------------------------------
 
-def _words(text: Column) -> Column:
-    """Lowercased whitespace words; empty array for blank/empty text."""
-    return F.when(F.length(F.trim(text)) == 0,
-                  F.array().cast("array<string>")) \
-            .otherwise(F.split(F.lower(F.trim(text)), r"\s+"))
+def _words(text: str) -> str:
+    """SQL text: lowercased whitespace words of the SQL expression
+    ``text``; empty array for blank/empty text."""
+    return (f"CASE WHEN length(trim({text})) = 0 THEN "
+            f"CAST(array() AS array<string>) "
+            f"ELSE split(lower(trim({text})), {_WS_SQL}) END")
 
 
-def _word_ngrams(ws: Column, n: int) -> Column:
-    """Space-joined word n-grams; empty array when fewer than n words."""
-    k = F.size(ws) - F.lit(n - 1)
-    return F.when(k >= 1,
-                  F.transform(F.sequence(F.lit(1), k),
-                              lambda i: F.concat_ws(" ", F.slice(ws, i, n)))) \
-            .otherwise(F.array().cast("array<string>"))
+def _word_ngrams(ws: str, n: int) -> str:
+    """SQL text: space-joined word n-grams of the array column ``ws``;
+    empty array when fewer than n words."""
+    k = f"size({ws}) - {n - 1}"
+    return (f"CASE WHEN {k} >= 1 THEN transform(sequence(1, {k}), "
+            f"x -> concat_ws(' ', slice({ws}, x, {n}))) "
+            "ELSE CAST(array() AS array<string>) END")
 
 
 def md5_uniform(key: Column, seed: str) -> Column:
@@ -129,7 +131,7 @@ def gopher_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     # filter(lines, ...) lambda would otherwise re-split the document per
     # distinct LINE, and each of the ws stats would re-split per row
     pre = df.select(F.col(id_col), F.col(text_col).alias("__t"),
-                    _words(F.col(text_col)).alias("__ws"),
+                    F.expr(_words(q(text_col))).alias("__ws"),
                     F.split(F.col(text_col), "\n").alias("__lines"))
     t = F.col("__t")
     ws = F.col("__ws")
@@ -306,14 +308,14 @@ def decontaminate_ngrams(docs: DataFrame, bench: DataFrame, id_col: str,
     bench_text_col = bench_text_col or text_col
     # token arrays projected before the n-gram transform (r13 CSE fix —
     # see dup_spans): the lambda's slice(ws, ...) must see a bound column
-    bgrams = (bench.select(_words(F.col(bench_text_col)).alias("__ws"))
+    bgrams = (bench.select(F.expr(_words(q(bench_text_col))).alias("__ws"))
                    .select(F.explode(F.array_distinct(
-                       _word_ngrams(F.col("__ws"), n))).alias("gram"))
+                       F.expr(_word_ngrams("__ws", n)))).alias("gram"))
                    .distinct())
     dgrams = (docs.select(F.col(id_col),
-                          _words(F.col(text_col)).alias("__ws"))
+                          F.expr(_words(q(text_col))).alias("__ws"))
                   .select(id_col,
-                          F.array_distinct(_word_ngrams(F.col("__ws"), n))
+                          F.array_distinct(F.expr(_word_ngrams("__ws", n)))
                            .alias("__grams")))
     totals = dgrams.select(id_col, F.size("__grams").alias("n_ngrams"))
     matched = (dgrams.select(id_col, F.explode("__grams").alias("gram"))
@@ -355,14 +357,14 @@ def decontaminate_ngrams_bloom(docs: DataFrame, bench: DataFrame,
     from .stats import bloom_contains, bloom_registers
     bench_text_col = bench_text_col or text_col
     # token arrays projected before the n-gram transform (r13 CSE fix)
-    bgrams = (bench.select(_words(F.col(bench_text_col)).alias("__ws"))
+    bgrams = (bench.select(F.expr(_words(q(bench_text_col))).alias("__ws"))
                    .select(F.explode(F.array_distinct(
-                       _word_ngrams(F.col("__ws"), n))).alias("gram")))
+                       F.expr(_word_ngrams("__ws", n)))).alias("gram")))
     regs = bloom_registers(bgrams, "gram", m_bits=m_bits, k=k, seed=seed)
     dgrams = (docs.select(F.col(id_col),
-                          _words(F.col(text_col)).alias("__ws"))
+                          F.expr(_words(q(text_col))).alias("__ws"))
                   .select(id_col,
-                          F.array_distinct(_word_ngrams(F.col("__ws"), n))
+                          F.array_distinct(F.expr(_word_ngrams("__ws", n)))
                            .alias("__grams")))
     totals = dgrams.select(id_col, F.size("__grams").alias("n_ngrams"))
     probed = bloom_contains(
@@ -404,7 +406,7 @@ def chunk_text(df: DataFrame, id_col: str, text_col: str,
     stride = window_tokens - overlap_tokens
     # token array projected before the chunk transform (r13 CSE fix): the
     # lambda's slice(ws, ...) would re-run the split() once per CHUNK
-    ws_df = df.select(F.col(id_col), _words(F.col(text_col)).alias("__ws"))
+    ws_df = df.select(F.col(id_col), F.expr(_words(q(text_col))).alias("__ws"))
     ws = F.col("__ws")
     n = F.size(ws)
     n_chunks = F.when(n <= 0, F.lit(0)).when(
@@ -576,7 +578,7 @@ def mix_sources(df: DataFrame, id_col: str, source_col: str, text_col: str,
     """
     if not targets:
         raise ValueError("targets must be non-empty")
-    tokens = token_count(F.col(text_col), "whitespace")
+    tokens = F.expr(token_count(q(text_col)))
     base = df.select(F.col(id_col), F.col(source_col).alias("source"),
                      tokens.alias("n_tokens"))
     totals = (base.groupBy("source")
@@ -622,7 +624,7 @@ def token_budget_filter(df: DataFrame, id_col: str, text_col: str,
     strata); the global form is a single total order — use strata at
     100 TB, exactly like ``pack_chunked``'s bucket argument.
     """
-    tokens = token_count(F.col(text_col), "whitespace")
+    tokens = F.expr(token_count(q(text_col)))
     cols = [F.col(id_col)] + ([F.col(strata_col)] if strata_col else [])
     base = df.select(*cols, tokens.alias("n_tokens"))
     if order_col is not None:
@@ -656,7 +658,7 @@ def pack_chunked(df: DataFrame, id_col: str, text_col: str,
     independently with one bounded window sort, so 100 TB packs as
     ``buckets`` parallel streams instead of one total order.
     """
-    tokens = token_count(F.col(text_col), "whitespace")
+    tokens = F.expr(token_count(q(text_col)))
     u = md5_uniform(F.col(id_col), seed)
     bucket = (F.conv(F.substring(
         F.md5(F.concat_ws(":", F.lit(seed + "b"),
@@ -728,12 +730,11 @@ def dup_spans(df: DataFrame, id_col: str, text_col: str,
     # is re-evaluated per array ELEMENT — the split() ran once per n-gram
     # position instead of once per document (r13, guide §7.2 duplicated
     # subtrees; measured 7x on the gram stage)
-    ws_df = df.select(F.col(id_col), _words(F.col(text_col)).alias("__ws"))
-    grams = (ws_df.select(F.col(id_col),
-                          F.posexplode(_word_ngrams(F.col("__ws"), k))
-                           .alias("__p0", "__g"))
-                  .select(id_col, (F.col("__p0") + 1).alias("__pos"),
-                          F.md5("__g").alias("__h")))
+    i_ = q(id_col)
+    grams = (df.selectExpr(i_, f"{_words(q(text_col))} AS __ws")
+               .selectExpr(i_, f"posexplode({_word_ngrams('__ws', k)}) "
+                               "AS (__p0, __g)")
+               .selectExpr(i_, "__p0 + 1 AS __pos", "md5(__g) AS __h"))
     # r13 moved the per-gram count from a groupBy + join-back (gram frame
     # exploded twice) into one unordered window over __h. r14 (judge
     # directive #6, guide §2 skew): the window puts EVERY occurrence of a
@@ -747,7 +748,7 @@ def dup_spans(df: DataFrame, id_col: str, text_col: str,
     # = the HAVING-filtered dup-hash table, streaming probe — no sort, no
     # per-partition buffering), and AQE's skew-join CAN split a hot probe
     # partition. Value-identical: same per-hash count, same min struct.
-    gp = grams.repartition(F.col("__h"))
+    gp = grams.repartition("__h")
     # The count aggregate must REFERENCE (id, pos) or column pruning
     # narrows this branch's exchange to [__h] alone — no longer the probe
     # branch's canonical twin, and the shared-exchange plan degrades to
@@ -759,40 +760,35 @@ def dup_spans(df: DataFrame, id_col: str, text_col: str,
     # true and the coalesce value never NULL — so the value is exactly
     # count(*), including rows whose id is NULL).
     if keep_first:
-        agg_cols = [F.count(F.lit(1)).alias("__c"),
-                    F.min(F.struct(F.col(id_col).alias("i"),
-                                   F.col("__pos").alias("p"))).alias("__f")]
+        agg_cols = ["count(1) AS __c",
+                    f"min(struct({i_} AS i, __pos AS p)) AS __f"]
     else:
-        agg_cols = [F.count(F.when(
-            F.col("__pos") >= 1,
-            F.coalesce(F.col(id_col).cast("string"), F.lit(""))))
-            .alias("__c")]
-    dup = (gp.groupBy("__h").agg(*agg_cols)
-             .filter(F.col("__c") >= int(min_count))
+        agg_cols = [f"count(CASE WHEN __pos >= 1 THEN "
+                    f"coalesce(CAST({i_} AS STRING), '') END) AS __c"]
+    dup = (gp.groupBy("__h").agg(*map(F.expr, agg_cols))
+             .filter(f"__c >= {int(min_count)}")
              .hint("shuffle_hash"))
     marked = gp.join(dup, "__h")
     if keep_first:
         # drop exactly the canonical first occurrence of each duplicated
         # gram (the lexicographic min (id, pos) over its occurrences)
-        marked = marked.filter(~((F.col(id_col) == F.col("__f")["i"])
-                                 & (F.col("__pos") == F.col("__f")["p"])))
-    marked = marked.select(id_col, "__pos")
-    w = Window.partitionBy(id_col).orderBy("__pos")
+        marked = marked.filter(f"NOT ({i_} = __f.i AND __pos = __f.p)")
+    marked = marked.selectExpr(i_, "__pos")
     # gaps-and-islands: a window starting at pos covers [pos, pos+k-1], so
     # it chains to the previous start unless the gap exceeds k
-    new_span = (F.lag("__pos").over(w).isNull()
-                | ((F.col("__pos") - F.lag("__pos").over(w)) > k))
-    wrun = w.rowsBetween(Window.unboundedPreceding, 0)
+    w = f"PARTITION BY {i_} ORDER BY __pos"
+    new_span = (f"lag(__pos) OVER ({w}) IS NULL OR "
+                f"(__pos - lag(__pos) OVER ({w})) > {k}")
     return (marked
-            .withColumn("__s", F.sum(new_span.cast("long")).over(wrun))
+            .withColumn("__s", F.expr(
+                f"sum(CAST({new_span} AS BIGINT)) OVER ({w} "
+                "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"))
             .groupBy(id_col, "__s")
-            .agg(F.min("__pos").alias("__a"),
-                 (F.max("__pos") + F.lit(k - 1)).alias("__b"))
-            .select(id_col,
-                    F.col("__a").cast("bigint").alias("span_start"),
-                    F.col("__b").cast("bigint").alias("span_end"),
-                    (F.col("__b") - F.col("__a") + 1).cast("bigint")
-                     .alias("span_tokens")))
+            .agg(F.expr("min(__pos) AS __a"),
+                 F.expr(f"max(__pos) + {k - 1} AS __b"))
+            .selectExpr(i_, "CAST(__a AS BIGINT) AS span_start",
+                        "CAST(__b AS BIGINT) AS span_end",
+                        "CAST(__b - __a + 1 AS BIGINT) AS span_tokens"))
 
 
 def dup_span_stats(df: DataFrame, id_col: str, text_col: str,
@@ -809,7 +805,7 @@ def dup_span_stats(df: DataFrame, id_col: str, text_col: str,
     per = spans.groupBy(id_col).agg(
         F.sum("span_tokens").alias("dup_tokens"))
     tot = df.select(F.col(id_col),
-                    F.size(_words(F.col(text_col))).cast("bigint")
+                    F.size(F.expr(_words(q(text_col)))).cast("bigint")
                      .alias("n_tokens"))
     return (tot.join(per, on=id_col, how="left")
                .select(id_col, "n_tokens",
@@ -848,7 +844,7 @@ def remove_dup_spans(df: DataFrame, id_col: str, text_col: str,
         F.explode(F.sequence(F.col("span_start"),
                              F.col("span_end"))).alias("__pos"))
     toks = (df.select(F.col(id_col),
-                      F.posexplode(_words(F.col(text_col)))
+                      F.posexplode(F.expr(_words(q(text_col))))
                        .alias("__p0", "__w"))
               .select(id_col, (F.col("__p0") + 1).alias("__pos"), "__w"))
     kept = toks.join(covered, [id_col, "__pos"], "left_anti")
@@ -859,7 +855,7 @@ def remove_dup_spans(df: DataFrame, id_col: str, text_col: str,
                     lambda s: s["__w"])).alias("clean_text"),
                 F.count(F.lit(1)).alias("__n_kept")))
     tot = df.select(F.col(id_col),
-                    F.size(_words(F.col(text_col))).cast("bigint")
+                    F.size(F.expr(_words(q(text_col)))).cast("bigint")
                      .alias("n_tokens"))
     return (tot.join(agg, on=id_col, how="left")
             .select(id_col,
@@ -873,22 +869,19 @@ def remove_dup_spans(df: DataFrame, id_col: str, text_col: str,
 # CCNet-style LM quality scoring (bigram language model)
 # ---------------------------------------------------------------------------
 
-def _word_bigrams_pos(ws: Column) -> Column:
-    """(pos, w1, w2) structs for consecutive word pairs, 1-based; empty
-    when fewer than 2 words."""
-    n = F.size(ws)
-    return F.when(n >= 2, F.transform(
-        F.sequence(F.lit(1), n - 1),
-        lambda i: F.struct(i.alias("pos"),
-                           F.element_at(ws, i).alias("w1"),
-                           F.element_at(ws, i + 1).alias("w2")))) \
-            .otherwise(F.expr(
-                "CAST(array() AS array<struct<pos:int,w1:string,w2:string>>)"))
+def _word_bigrams_pos(ws: str) -> str:
+    """SQL text: (pos, w1, w2) structs for consecutive word pairs of the
+    array column ``ws``, 1-based; empty when fewer than 2 words."""
+    return (f"CASE WHEN size({ws}) >= 2 THEN transform(sequence(1, "
+            f"size({ws}) - 1), x -> struct(x AS pos, element_at({ws}, x) "
+            f"AS w1, element_at({ws}, x + 1) AS w2)) ELSE "
+            "CAST(array() AS array<struct<pos:int,w1:string,w2:string>>) END")
 
 
-def _uni_bigram_pairs(ws: Column) -> Column:
-    """One array holding BOTH the unigram and the bigram keys of a token
-    array, as (w1, w2) structs — unigrams ride with w2 = NULL. Exploding
+def _uni_bigram_pairs(ws: str) -> str:
+    """SQL text: one array holding BOTH the unigram and the bigram keys of
+    the token array ``ws``, as (w1, w2) structs — unigrams ride with
+    w2 = NULL. Exploding
     this once and splitting the aggregated count table on ``w2 IS NULL``
     yields the exact unigram and bigram count tables the two separate
     explodes produced (same integer counts, NULL can never collide with a
@@ -896,16 +889,50 @@ def _uni_bigram_pairs(ws: Column) -> Column:
     once per count table (r14, guide §2.4/§6: the uni/bc/vocab subtrees
     now share one exchange via ReuseExchange instead of re-running the
     scan+split per consumer)."""
-    n = F.size(ws)
-    unis = F.transform(ws, lambda w: F.struct(
-        w.alias("w1"), F.lit(None).cast("string").alias("w2")))
-    bis = F.when(n >= 2, F.transform(
-        F.sequence(F.lit(1), n - 1),
-        lambda i: F.struct(F.element_at(ws, i).alias("w1"),
-                           F.element_at(ws, i + 1).alias("w2")))) \
-           .otherwise(F.expr(
-               "CAST(array() AS array<struct<w1:string,w2:string>>)"))
-    return F.concat(unis, bis)
+    unis = (f"transform({ws}, x -> struct(x AS w1, "
+            "CAST(NULL AS STRING) AS w2))")
+    bis = (f"CASE WHEN size({ws}) >= 2 THEN transform(sequence(1, "
+           f"size({ws}) - 1), x -> struct(element_at({ws}, x) AS w1, "
+           f"element_at({ws}, x + 1) AS w2)) ELSE "
+           "CAST(array() AS array<struct<w1:string,w2:string>>) END")
+    return f"concat({unis}, {bis})"
+
+
+def _doc_bigrams(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(<id>, __pos, w1, w2): one row per consecutive word pair of each
+    document. __ws is projected first: the bigram transform's
+    element_at(ws, i) would otherwise re-run the split() once per bigram
+    position (r13 CSE fix)."""
+    i_ = q(id_col)
+    return (df.selectExpr(i_, f"{_words(q(text_col))} AS __ws")
+              .selectExpr(i_, f"explode({_word_bigrams_pos('__ws')}) AS __b")
+              .selectExpr(i_, "__b.pos AS __pos", "__b.w1 AS w1",
+                          "__b.w2 AS w2"))
+
+
+def _pair_counts(words: DataFrame, counts: list[str],
+                 carry: tuple[str, ...] = ()) -> DataFrame:
+    """(w1, w2, <counts>, __isuni): the merged unigram + bigram count
+    table of the token arrays ``__ws`` in ``words``, whose ``carry``
+    columns ride the explode into the count expressions (see
+    :func:`_uni_bigram_pairs`). The unigram discriminator is an AGGREGATE
+    output (count of non-null w2 in the group is 0 iff the group key w2
+    is NULL): a filter on w2 itself is a grouping-key predicate that
+    Catalyst pushes BELOW the aggregate, splitting the uni/bc subtrees
+    into separate scans — on an agg output the filters stay above and
+    all consumers share one exchange."""
+    return (words.selectExpr(f"explode({_uni_bigram_pairs('__ws')}) AS __p",
+                             *carry)
+                 .selectExpr("__p.w1 AS w1", "__p.w2 AS w2", *carry)
+                 .groupBy("w1", "w2")
+                 .agg(*map(F.expr, counts),
+                      F.expr("count(w2) = 0 AS __isuni")))
+
+
+def _position_fold(field: str) -> str:
+    """Sequential sum of ``field`` over the position-sorted array __a."""
+    return (f"aggregate(transform(__a, x -> x.{field}), 0.0D, "
+            "(x, y) -> x + y)")
 
 
 def lm_score(df: DataFrame, id_col: str, text_col: str,
@@ -956,94 +983,59 @@ def lm_score(df: DataFrame, id_col: str, text_col: str,
     # exchange via ReuseExchange instead of re-running the corpus scan +
     # split per subtree (r14; counts are exact integers, so every derived
     # probability is bit-identical to the separate-table form)
-    tr_ws = tr.select(_words(F.col(text_col)).alias("__ws"))
-    merged = (tr_ws.select(F.explode(_uni_bigram_pairs(F.col("__ws")))
-                            .alias("__p"))
-                   .select(F.col("__p.w1").alias("w1"),
-                           F.col("__p.w2").alias("w2"))
-                   .groupBy("w1", "w2")
-                   .agg(F.count(F.lit(1)).alias("__c"),
-                        # unigram discriminator as an AGGREGATE output
-                        # (count of non-null w2 in the group is 0 iff the
-                        # group key w2 is NULL): a filter on w2 itself is a
-                        # grouping-key predicate that Catalyst pushes BELOW
-                        # the aggregate, splitting the uni/bc subtrees into
-                        # separate scans — on an agg output the filters
-                        # stay above and all consumers share one exchange
-                        (F.count("w2") == 0).alias("__isuni")))
-    uni = (merged.filter(F.col("__isuni"))
-                 .select("w1", F.col("__c").alias("__c1")))
+    merged = _pair_counts(
+        tr.selectExpr(f"{_words(q(text_col))} AS __ws"),
+        ["count(1) AS __c"])
+    uni = merged.filter("__isuni").selectExpr("w1", "__c AS __c1")
     # count rows THROUGH __c1 (>= 1 always — a group exists only with at
     # least one row, so the value equals the old count(*)): referencing
     # the count keeps this branch's column pruning identical to uni/bc's,
     # a prerequisite for the three branches to share one exchange
-    vocab = uni.agg(F.count(F.when(F.col("__c1") >= 1, F.lit(1)))
-                     .cast("double").alias("__V"))
-    bc = (merged.filter(~F.col("__isuni"))
-                .select("w1", "w2", F.col("__c").alias("__c12")))
-    # __ws projected first: the bigram transform's element_at(ws, i) would
-    # otherwise re-run the split() once per bigram position (r13 CSE fix)
-    doc_bg = (df.select(F.col(id_col), _words(F.col(text_col)).alias("__ws"))
-                .select(F.col(id_col),
-                        F.explode(_word_bigrams_pos(F.col("__ws")))
-                         .alias("__b"))
-                .select(id_col, F.col("__b.pos").alias("__pos"),
-                        F.col("__b.w1").alias("w1"),
-                        F.col("__b.w2").alias("w2")))
+    vocab = uni.agg(F.expr(
+        "CAST(count(CASE WHEN __c1 >= 1 THEN 1 END) AS DOUBLE) AS __V"))
+    bc = merged.filter("NOT __isuni").selectExpr("w1", "w2", "__c AS __c12")
     # all joins below use NULL-SAFE key equality (<=>): the keys are never
     # null on either side (tokens from split, post-filter count rows), so
     # the result multiset is identical to plain equality — but plain `=`
     # keys make the optimizer infer `isnotnull(w1/w2)` predicates and push
     # them BELOW the count aggregates, where they differ per branch and
     # break the single-exchange sharing the merged table exists for
-    b, u, g = bc.alias("b"), uni.alias("u"), doc_bg.alias("g")
+    i_ = q(id_col)
+    b, u = bc.alias("b"), uni.alias("u")
+    g = _doc_bigrams(df, id_col, text_col).alias("g")
     if train is None:
         # self-scoring: every scored bigram exists in the counts, so the
         # denominator pre-join (count tables only) + ONE inner join on
         # the corpus side is value-identical to the two-join form
-        denom = (b.join(u, F.col("b.w1").eqNullSafe(F.col("u.w1")))
-                  .select(F.col("b.w1").alias("w1"),
-                          F.col("b.w2").alias("w2"), "__c12", "__c1")
+        denom = (b.join(u, F.expr("b.w1 <=> u.w1"))
+                  .selectExpr("b.w1 AS w1", "b.w2 AS w2", "__c12", "__c1")
                   .alias("d"))
-        j = (g.join(denom,
-                    F.col("g.w1").eqNullSafe(F.col("d.w1"))
-                    & F.col("g.w2").eqNullSafe(F.col("d.w2")))
-              .select(id_col, "__pos", "__c12", "__c1")
+        j = (g.join(denom, F.expr("g.w1 <=> d.w1 AND g.w2 <=> d.w2"))
+              .selectExpr(i_, "__pos", "__c12", "__c1")
               .crossJoin(F.broadcast(vocab)))
     else:
         d2 = bc.alias("d2")
-        j = (g.join(d2,
-                    F.col("g.w1").eqNullSafe(F.col("d2.w1"))
-                    & F.col("g.w2").eqNullSafe(F.col("d2.w2")), "left")
-              .select(id_col, "__pos", F.col("g.w1").alias("__gw1"),
-                      "__c12")
-              .join(u, F.col("__gw1").eqNullSafe(F.col("u.w1")), "left")
-              .select(id_col, "__pos", "__c12", "__c1")
+        j = (g.join(d2, F.expr("g.w1 <=> d2.w1 AND g.w2 <=> d2.w2"), "left")
+              .selectExpr(i_, "__pos", "g.w1 AS __gw1", "__c12")
+              .join(u, F.expr("__gw1 <=> u.w1"), "left")
+              .selectExpr(i_, "__pos", "__c12", "__c1")
               .crossJoin(F.broadcast(vocab)))
-    logp = F.log(
-        (F.coalesce(F.col("__c12"), F.lit(0)).cast("double") + F.lit(kf))
-        / (F.coalesce(F.col("__c1"), F.lit(0)).cast("double")
-           + F.lit(kf) * F.col("__V")))
-    per = (j.select(id_col, "__pos", logp.alias("__lp"))
+    kl = dbl(kf)
+    logp = (f"ln((CAST(coalesce(__c12, 0) AS DOUBLE) + {kl}) / "
+            f"(CAST(coalesce(__c1, 0) AS DOUBLE) + {kl} * __V))")
+    per = (j.selectExpr(i_, "__pos", f"{logp} AS __lp")
             .groupBy(id_col)
-            .agg(F.count(F.lit(1)).alias("__n"),
-                 F.aggregate(
-                     F.transform(
-                         F.array_sort(F.collect_list(
-                             F.struct(F.col("__pos"), F.col("__lp")))),
-                         lambda s: s["__lp"]),
-                     F.lit(0.0), lambda a, x: a + x).alias("__s")))
-    mean = F.col("__s") / F.col("__n").cast("double")
-    per = per.select(id_col,
-                     F.col("__n").cast("bigint").alias("n_bigrams"),
-                     mean.alias("mean_logprob"),
-                     F.exp(-mean).alias("perplexity"))
-    base = df.select(F.col(id_col))
-    return (base.join(per, on=id_col, how="left")
-            .select(id_col,
-                    F.coalesce("n_bigrams", F.lit(0)).cast("bigint")
-                     .alias("n_bigrams"),
-                    "mean_logprob", "perplexity"))
+            .agg(F.expr("count(1) AS __n"),
+                 F.expr("aggregate(transform(array_sort(collect_list("
+                        "struct(__pos, __lp))), x -> x.__lp), 0.0D, "
+                        "(x, y) -> x + y) AS __s")))
+    mean = "__s / CAST(__n AS DOUBLE)"
+    per = per.selectExpr(i_, "CAST(__n AS BIGINT) AS n_bigrams",
+                         f"{mean} AS mean_logprob",
+                         f"exp(-({mean})) AS perplexity")
+    return (df.selectExpr(i_).join(per, on=id_col, how="left")
+            .selectExpr(i_, "CAST(coalesce(n_bigrams, 0) AS BIGINT) "
+                            "AS n_bigrams", "mean_logprob", "perplexity"))
 
 
 def temperature_weights(df: DataFrame, source_col: str, text_col: str,
@@ -1073,7 +1065,7 @@ def temperature_weights(df: DataFrame, source_col: str, text_col: str,
     a = float(alpha)
     if a < 0:
         raise ValueError("alpha must be >= 0")
-    tokens = token_count(F.col(text_col), "whitespace")
+    tokens = F.expr(token_count(q(text_col)))
     totals = (df.select(F.col(source_col).alias("source"),
                         tokens.alias("__t"))
                 .groupBy("source")
@@ -1160,107 +1152,75 @@ def dsir_weights(df: DataFrame, id_col: str, text_col: str,
         raise ValueError("id_col may not be named 'w1' or 'w2'")
     kf = float(k)
 
-    tagged = (df.select(_words(F.col(text_col)).alias("__ws"),
-                        F.lit(0).alias("__src"))
-                .unionAll(target.select(_words(F.col(text_col)).alias("__ws"),
-                                        F.lit(1).alias("__src"))))
-    raw_n = F.count(F.when(F.col("__src") == 0, F.lit(1)))
-    tgt_n = F.count(F.when(F.col("__src") == 1, F.lit(1)))
+    words = f"{_words(q(text_col))} AS __ws"
+    tagged = (df.selectExpr(words, "0 AS __src")
+                .unionAll(target.selectExpr(words, "1 AS __src")))
     # ONE scan+tokenize+explode of the tagged union builds both count
     # tables and both vocab sizes (see _uni_bigram_pairs / lm_score —
     # previously the union pass re-ran for uni, bc AND vocab: 6 corpus
     # scans; now the three subtrees share the aggregate's exchange)
-    merged = (tagged.select(F.explode(_uni_bigram_pairs(F.col("__ws")))
-                             .alias("__p"), "__src")
-                    .select(F.col("__p.w1").alias("w1"),
-                            F.col("__p.w2").alias("w2"), "__src")
-                    .groupBy("w1", "w2")
-                    .agg(raw_n.alias("__rc"), tgt_n.alias("__tc"),
-                         # agg-output discriminator — see lm_score: keeps
-                         # the uni/bc filters ABOVE the aggregate so both
-                         # consumers reuse one exchange
-                         (F.count("w2") == 0).alias("__isuni")))
-    uni = (merged.filter(F.col("__isuni"))
-                 .select("w1", F.col("__rc").alias("__rc1"),
-                         F.col("__tc").alias("__tc1")))
-    bc = (merged.filter(~F.col("__isuni"))
-                .select("w1", "w2", F.col("__rc").alias("__rc12"),
-                        F.col("__tc").alias("__tc12")))
+    merged = _pair_counts(
+        tagged, ["count(CASE WHEN __src = 0 THEN 1 END) AS __rc",
+                 "count(CASE WHEN __src = 1 THEN 1 END) AS __tc"],
+        carry=("__src",))
+    uni = merged.filter("__isuni").selectExpr("w1", "__rc AS __rc1",
+                                              "__tc AS __tc1")
+    bc = merged.filter("NOT __isuni").selectExpr(
+        "w1", "w2", "__rc AS __rc12", "__tc AS __tc12")
     # per-side vocabulary sizes from the shared unigram table: a word is
     # in a side's vocabulary iff its count there is positive — the same
     # number count(*) over that side's own unigram table produced
     vocab = uni.agg(
-        F.count(F.when(F.col("__rc1") > 0, F.lit(1))).cast("double")
-         .alias("__rV"),
-        F.count(F.when(F.col("__tc1") > 0, F.lit(1))).cast("double")
-         .alias("__tV"))
-    # __ws projected first — see lm_score's doc_bg (r13 CSE fix)
-    doc_bg = (df.select(F.col(id_col), _words(F.col(text_col)).alias("__ws"))
-                .select(F.col(id_col),
-                        F.explode(_word_bigrams_pos(F.col("__ws")))
-                         .alias("__b"))
-                .select(id_col, F.col("__b.pos").alias("__pos"),
-                        F.col("__b.w1").alias("w1"),
-                        F.col("__b.w2").alias("w2")))
+        F.expr("CAST(count(CASE WHEN __rc1 > 0 THEN 1 END) AS DOUBLE) "
+               "AS __rV"),
+        F.expr("CAST(count(CASE WHEN __tc1 > 0 THEN 1 END) AS DOUBLE) "
+               "AS __tV"))
     # both denominators pre-joined onto the count table (count-table
     # sized); the corpus' own bigrams always match (rc12 >= 1), so the
     # single inner join is exactly lm_score's self path, and the
     # target's 0-counts reproduce the LEFT-join NULLs through the same
     # coalesce(.., 0). Null-safe keys — see lm_score: keeps the inferred
     # isnotnull predicates from splitting the shared count exchange.
-    b, u, g = bc.alias("b"), uni.alias("u"), doc_bg.alias("g")
-    denom = (b.join(u, F.col("b.w1").eqNullSafe(F.col("u.w1")))
-              .select(F.col("b.w1").alias("w1"),
-                      F.col("b.w2").alias("w2"),
-                      "__rc12", "__tc12", "__rc1", "__tc1")
+    i_ = q(id_col)
+    b, u = bc.alias("b"), uni.alias("u")
+    g = _doc_bigrams(df, id_col, text_col).alias("g")
+    denom = (b.join(u, F.expr("b.w1 <=> u.w1"))
+              .selectExpr("b.w1 AS w1", "b.w2 AS w2", "__rc12", "__tc12",
+                          "__rc1", "__tc1")
               .alias("d"))
-    j = (g.join(denom,
-                F.col("g.w1").eqNullSafe(F.col("d.w1"))
-                & F.col("g.w2").eqNullSafe(F.col("d.w2")))
-          .select(id_col, "__pos", "__rc12", "__tc12", "__rc1", "__tc1")
+    j = (g.join(denom, F.expr("g.w1 <=> d.w1 AND g.w2 <=> d.w2"))
+          .selectExpr(i_, "__pos", "__rc12", "__tc12", "__rc1", "__tc1")
           .crossJoin(F.broadcast(vocab)))
     # try_divide: an empty corpus gives V = 0 and a zero denominator —
     # NULL (not an ANSI DIVIDE_BY_ZERO crash), cascading to the NULL
     # logprob/log_weight the docstring promises; on the normal path the
     # division is the same correctly-rounded double op
-    lp_r = F.log(F.try_divide(
-        F.coalesce(F.col("__rc12"), F.lit(0)).cast("double") + F.lit(kf),
-        F.coalesce(F.col("__rc1"), F.lit(0)).cast("double")
-        + F.lit(kf) * F.col("__rV")))
-    lp_t = F.log(F.try_divide(
-        F.coalesce(F.col("__tc12"), F.lit(0)).cast("double") + F.lit(kf),
-        F.coalesce(F.col("__tc1"), F.lit(0)).cast("double")
-        + F.lit(kf) * F.col("__tV")))
-    per = (j.select(id_col, "__pos", lp_t.alias("__lpt"),
-                    lp_r.alias("__lpr"))
+    kl = dbl(kf)
+
+    def logp(c12: str, c1: str, v: str) -> str:
+        return (f"ln(try_divide(CAST(coalesce({c12}, 0) AS DOUBLE) + {kl}, "
+                f"CAST(coalesce({c1}, 0) AS DOUBLE) + {kl} * {v}))")
+
+    per = (j.selectExpr(i_, "__pos",
+                        f"{logp('__tc12', '__tc1', '__tV')} AS __lpt",
+                        f"{logp('__rc12', '__rc1', '__rV')} AS __lpr")
             .groupBy(id_col)
-            .agg(F.count(F.lit(1)).alias("__n"),
-                 F.array_sort(F.collect_list(F.struct(
-                     F.col("__pos"), F.col("__lpt"), F.col("__lpr"))))
-                  .alias("__a")))
+            .agg(F.expr("count(1) AS __n"),
+                 F.expr("array_sort(collect_list(struct(__pos, __lpt, "
+                        "__lpr))) AS __a")))
     # one collected array, two position-ordered folds — each bit-equal
     # to the corresponding lm_score fold (__pos is unique per doc, so
     # the struct sort == the single-leg (pos, lp) sort)
-    s_t = F.aggregate(F.transform("__a", lambda s: s["__lpt"]),
-                      F.lit(0.0), lambda a, x: a + x)
-    s_r = F.aggregate(F.transform("__a", lambda s: s["__lpr"]),
-                      F.lit(0.0), lambda a, x: a + x)
-    nd = F.col("__n").cast("double")
-    per = per.select(id_col,
-                     F.col("__n").cast("bigint").alias("n_bigrams"),
-                     (s_t / nd).alias("logprob_target"),
-                     (s_r / nd).alias("logprob_raw"))
-    base = df.select(F.col(id_col))
-    out = base.join(per, on=id_col, how="left")
-    lw = F.when(
-        F.col("n_bigrams") > 0,
-        F.col("n_bigrams").cast("double")
-        * (F.col("logprob_target") - F.col("logprob_raw")))
-    return out.select(
-        id_col,
-        F.coalesce("n_bigrams", F.lit(0)).cast("bigint")
-         .alias("n_bigrams"),
-        "logprob_target", "logprob_raw", lw.alias("log_weight"))
+    per = per.selectExpr(
+        i_, "CAST(__n AS BIGINT) AS n_bigrams",
+        f"{_position_fold('__lpt')} / CAST(__n AS DOUBLE) AS logprob_target",
+        f"{_position_fold('__lpr')} / CAST(__n AS DOUBLE) AS logprob_raw")
+    out = df.selectExpr(i_).join(per, on=id_col, how="left")
+    return out.selectExpr(
+        i_, "CAST(coalesce(n_bigrams, 0) AS BIGINT) AS n_bigrams",
+        "logprob_target", "logprob_raw",
+        "CASE WHEN n_bigrams > 0 THEN CAST(n_bigrams AS DOUBLE) * "
+        "(logprob_target - logprob_raw) END AS log_weight")
 
 
 def build_vocab(df: DataFrame, id_col: str, text_col: str,
@@ -1289,7 +1249,7 @@ def build_vocab(df: DataFrame, id_col: str, text_col: str,
         raise ValueError("max_terms must be >= 1")
     from pyspark.sql import Window
     words = (df.select(F.col(id_col),
-                       F.explode(_words(F.col(text_col))).alias("word")))
+                       F.explode(F.expr(_words(q(text_col)))).alias("word")))
     counts = words.groupBy("word").agg(
         F.count(F.lit(1)).alias("n_occurrences"),
         F.count_distinct(F.col(id_col)).alias("n_docs"))

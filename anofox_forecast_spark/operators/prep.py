@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..frequency import Frequency, parse_frequency
+from ..sqltext import dbl, q
 
 # ---------------------------------------------------------------------------
 # Gap filling
@@ -46,6 +47,18 @@ def _unit_start(col: Column, n_months: int) -> Column:
     if n_months % 3 == 0:
         return F.date_trunc("quarter", col)
     return F.date_trunc("month", col)
+
+
+def _month_unit_index_sql(col: str, n_months: int) -> str:
+    """SQL-text form of :func:`_month_unit_index`."""
+    return f"FLOOR((year({col}) * 12 + month({col}) - 1) / {n_months})"
+
+
+def _unit_start_sql(col: str, n_months: int) -> str:
+    """SQL-text form of :func:`_unit_start`."""
+    unit = ("year" if n_months % 12 == 0 else
+            "quarter" if n_months % 3 == 0 else "month")
+    return f"date_trunc('{unit}', {col})"
 
 
 def ts_fill_gaps_by(df: DataFrame, group_col: str, ds_col: str, y_col: str,
@@ -65,40 +78,38 @@ def ts_fill_gaps_by(df: DataFrame, group_col: str, ds_col: str, y_col: str,
     freq = parse_frequency(frequency)
     ds_type = df.schema[ds_col].dataType
     y_type = df.schema[y_col].dataType
-    base = df.select(group_col, ds_col, y_col)
-    w = Window.partitionBy(group_col).orderBy(ds_col)
-    nxt = F.lead(F.col(ds_col)).over(w)
-    ds = F.col(ds_col)
+    g, ds, y = q(group_col), q(ds_col), q(y_col)
+    dst, yt = ds_type.simpleString(), y_type.simpleString()
+    base = df.selectExpr(g, ds, y)
+    nxt = f"lead({ds}) OVER (PARTITION BY {g} ORDER BY {ds})"
 
     if freq.kind == "int" or isinstance(ds_type, (T.IntegerType, T.LongType)):
         step = freq.n if freq.kind == "int" else 1
-        k = F.floor((nxt - ds) / step) - 1
-        gap_ds = lambda s: (ds + s * step).cast(ds_type)  # noqa: E731
+        k = f"FLOOR(({nxt} - {ds}) / {step}) - 1"
+        gap_ds = f"CAST({ds} + x * {step} AS {dst})"
     elif freq.kind == "month":
         n = freq.n
-        k = _month_unit_index(nxt, n) - _month_unit_index(ds, n) - 1
-        gap_ds = lambda s: F.add_months(_unit_start(ds, n), s * n).cast(ds_type)  # noqa: E731
+        k = (f"{_month_unit_index_sql(nxt, n)} - "
+             f"{_month_unit_index_sql(ds, n)} - 1")
+        gap_ds = f"CAST(add_months({_unit_start_sql(ds, n)}, x * {n}) AS {dst})"
     else:
         sec = freq.n
-        gap_s = nxt.cast("timestamp").cast("double") - ds.cast("timestamp").cast("double")
-        k = F.floor(gap_s / sec) - 1
-        gap_ds = lambda s: F.timestamp_add(  # noqa: E731
-            "SECOND", (s * sec).cast("long"), ds.cast("timestamp")).cast(ds_type)
+        gap_s = (f"CAST(CAST({nxt} AS TIMESTAMP) AS DOUBLE) - "
+                 f"CAST(CAST({ds} AS TIMESTAMP) AS DOUBLE)")
+        k = f"FLOOR(({gap_s}) / {sec}) - 1"
+        gap_ds = (f"CAST(timestampadd(SECOND, CAST(x * {sec} AS BIGINT), "
+                  f"CAST({ds} AS TIMESTAMP)) AS {dst})")
 
-    entries = F.concat(
-        F.array(F.struct(ds.alias("ds"), F.col(y_col).cast(y_type).alias("y"))),
-        F.when(k >= 1,
-               F.transform(F.sequence(F.lit(1), k),
-                           lambda s: F.struct(gap_ds(s).alias("ds"),
-                                              F.lit(None).cast(y_type).alias("y"))))
-         .otherwise(F.array().cast(
-             T.ArrayType(T.StructType([T.StructField("ds", ds_type),
-                                       T.StructField("y", y_type)])))),
-    )
-    return (base.withColumn("__e", entries)
-            .select(group_col, F.explode("__e").alias("__x"))
-            .select(F.col(group_col), F.col("__x.ds").alias(ds_col),
-                    F.col("__x.y").alias(y_col)))
+    arr_t = T.ArrayType(T.StructType([T.StructField("ds", ds_type),
+                                      T.StructField("y", y_type)]))
+    entries = (
+        f"concat(array(struct({ds} AS ds, CAST({y} AS {yt}) AS y)), "
+        f"CASE WHEN {k} >= 1 THEN transform(sequence(1, {k}), "
+        f"x -> struct({gap_ds} AS ds, CAST(NULL AS {yt}) AS y)) "
+        f"ELSE CAST(array() AS {arr_t.simpleString()}) END)")
+    return (base.withColumn("__e", F.expr(entries))
+            .selectExpr(g, "explode(__e) AS __x")
+            .selectExpr(g, f"__x.ds AS {ds}", f"__x.y AS {y}"))
 
 
 def ts_fill_forward_by(df: DataFrame, group_col: str, ds_col: str, y_col: str,
@@ -390,16 +401,16 @@ def ts_check_leakage(df: DataFrame, is_test_col: str,
 # global models and quantile clipping before robust fits)
 # ---------------------------------------------------------------------------
 
-def _q7(arr: Column, n: Column, q: float) -> Column:
-    """Type-7 linear-interpolated quantile of a sorted double array —
-    the exact arithmetic of ``stats.group_quantiles`` (kept expression-
-    identical so the DuckDB oracles replay both bit-for-bit)."""
-    ix = F.lit(float(q)) * (n - 1).cast("double")
-    lo = F.floor(ix).cast("int")
-    frac = ix - lo.cast("double")
-    return F.when(n == 1, F.get(arr, 0)).otherwise(
-        F.get(arr, lo) * (F.lit(1.0) - frac)
-        + F.get(arr, F.least(lo + 1, n - 1)) * frac)
+def _q7(arr: str, n: str, qt: float) -> str:
+    """Type-7 linear-interpolated quantile of a sorted double array, SQL
+    text — the exact arithmetic of ``stats.group_quantiles`` (kept
+    expression-identical so the DuckDB oracles replay both bit-for-bit)."""
+    ix = f"({dbl(qt)} * CAST({n} - 1 AS DOUBLE))"
+    lo = f"CAST(FLOOR({ix}) AS INT)"
+    frac = f"({ix} - CAST({lo} AS DOUBLE))"
+    return (f"CASE WHEN {n} = 1 THEN get({arr}, 0) ELSE "
+            f"get({arr}, {lo}) * (1.0D - {frac}) + "
+            f"get({arr}, least({lo} + 1, {n} - 1)) * {frac} END")
 
 
 def _sorted_vals(df: DataFrame, group_col: str, y_col: str) -> DataFrame:
@@ -407,9 +418,10 @@ def _sorted_vals(df: DataFrame, group_col: str, y_col: str) -> DataFrame:
     basis for scaling stats: every fold over it is a fixed-order
     sequential sum, bit-equal on any input partitioning and replayable
     engine-side via DuckDB ``list_sort(list(y))`` + ``list_reduce``."""
-    arr = F.array_sort(F.collect_list(
-        F.when(F.col(y_col).isNotNull(), F.col(y_col).cast("double"))))
-    return df.groupBy(group_col).agg(arr.alias("__v"))
+    y = q(y_col)
+    return df.groupBy(group_col).agg(F.expr(
+        f"array_sort(collect_list(CASE WHEN {y} IS NOT NULL THEN "
+        f"CAST({y} AS DOUBLE) END)) AS __v"))
 
 
 def ts_scale_by(df: DataFrame, group_col: str, ds_col: str, y_col: str,
@@ -437,41 +449,35 @@ def ts_scale_by(df: DataFrame, group_col: str, ds_col: str, y_col: str,
         raise ValueError(f"input already has output column(s) {sorted(taken)}; "
                          f"rename or drop them first")
     base = _sorted_vals(df, group_col, y_col)
-    n = F.size("__v")
-    nd = n.cast("double")
+    n = "size(__v)"
     if method == "zscore":
         # n >= 1 guard: an all-NULL-y group folds an empty array, and
         # under ANSI mode the 0.0/0 mean would raise DIVIDE_BY_ZERO and
         # kill the job; CaseWhen evaluates lazily, so the division never
         # runs for that group and loc/scale come out NULL — matching the
         # TsScaleUDTF twin's NULL stats for an all-NULL partition
-        mean = F.when(n >= 1, F.aggregate("__v", F.lit(0.0),
-                                          lambda a, x: a + x) / nd)
-        base = base.withColumn("__loc", mean)
+        loc = (f"CASE WHEN {n} >= 1 THEN aggregate(__v, 0.0D, "
+               f"(x, y) -> x + y) / CAST({n} AS DOUBLE) END")
         # squared deviations via transform-then-fold: the multiply lives
         # in its own kernel on both engines (no FMA-fusion ambiguity in
         # a single a + x*x lambda)
-        var = F.aggregate(
-            F.transform("__v", lambda x: (x - F.col("__loc"))
-                        * (x - F.col("__loc"))),
-            F.lit(0.0), lambda a, x: a + x) / (nd - F.lit(1.0))
-        scale = F.when(n >= 2, F.sqrt(var))
+        var = ("aggregate(transform(__v, x -> (x - __loc) * (x - __loc)), "
+               f"0.0D, (x, y) -> x + y) / (CAST({n} AS DOUBLE) - 1.0D)")
+        scale = f"CASE WHEN {n} >= 2 THEN sqrt({var}) END"
     elif method == "minmax":
-        base = base.withColumn("__loc", F.get("__v", 0))
-        scale = F.when(n >= 1, F.get("__v", n - 1) - F.col("__loc"))
+        loc = "get(__v, 0)"
+        scale = f"CASE WHEN {n} >= 1 THEN get(__v, {n} - 1) - __loc END"
     else:  # robust
-        base = base.withColumn("__loc", _q7(F.col("__v"), n, 0.5))
-        scale = F.when(n >= 1, _q7(F.col("__v"), n, 0.75)
-                       - _q7(F.col("__v"), n, 0.25))
-    stats = base.select(
-        group_col,
-        F.col("__loc").alias("scale_loc"),
-        scale.alias("scale_scale"))
+        loc = _q7("__v", n, 0.5)
+        scale = (f"CASE WHEN {n} >= 1 THEN {_q7('__v', n, 0.75)} - "
+                 f"{_q7('__v', n, 0.25)} END")
+    stats = (base.withColumn("__loc", F.expr(loc))
+                 .selectExpr(q(group_col), "__loc AS scale_loc",
+                             f"{scale} AS scale_scale"))
     out = _join_stats_back(df, stats, group_col)
-    y = F.col(y_col).cast("double")
-    scaled = F.when(F.col("scale_scale") > 0,
-                    (y - F.col("scale_loc")) / F.col("scale_scale"))
-    return out.withColumn("y_scaled", scaled)
+    return out.withColumn("y_scaled", F.expr(
+        "CASE WHEN scale_scale > 0 THEN "
+        f"(CAST({q(y_col)} AS DOUBLE) - scale_loc) / scale_scale END"))
 
 
 def _join_stats_back(df: DataFrame, stats: DataFrame,
@@ -483,8 +489,7 @@ def _join_stats_back(df: DataFrame, stats: DataFrame,
     NULL partitions. ``<=>`` is still an equi-join key, so the plan
     stays a BroadcastHashJoin."""
     sp = stats.withColumnRenamed(group_col, "__g")
-    out = df.join(F.broadcast(sp),
-                  F.col(group_col).eqNullSafe(F.col("__g")))
+    out = df.join(F.broadcast(sp), F.expr(f"{q(group_col)} <=> __g"))
     return out.drop("__g")
 
 
@@ -509,21 +514,17 @@ def ts_winsorize_by(df: DataFrame, group_col: str, ds_col: str, y_col: str,
         raise ValueError(f"input already has output column(s) {sorted(taken)}; "
                          f"rename or drop them first")
     base = _sorted_vals(df, group_col, y_col)
-    n = F.size("__v")
-    stats = base.select(
-        group_col,
-        _q7(F.col("__v"), n, lower).alias("clip_lo"),
-        _q7(F.col("__v"), n, upper).alias("clip_hi"))
+    stats = base.selectExpr(
+        q(group_col),
+        f"{_q7('__v', 'size(__v)', lower)} AS clip_lo",
+        f"{_q7('__v', 'size(__v)', upper)} AS clip_hi")
     out = _join_stats_back(df, stats, group_col)
-    y = F.col(y_col).cast("double")
-    wz = F.when(y < F.col("clip_lo"), F.col("clip_lo")) \
-          .when(y > F.col("clip_hi"), F.col("clip_hi")) \
-          .otherwise(y)
-    return (out.withColumn("y_winsorized", wz)
-               .withColumn("was_clipped",
-                           F.coalesce((y < F.col("clip_lo"))
-                                      | (y > F.col("clip_hi")),
-                                      F.lit(False))))
+    y = f"CAST({q(y_col)} AS DOUBLE)"
+    return (out.withColumn("y_winsorized", F.expr(
+                f"CASE WHEN {y} < clip_lo THEN clip_lo "
+                f"WHEN {y} > clip_hi THEN clip_hi ELSE {y} END"))
+               .withColumn("was_clipped", F.expr(
+                f"coalesce({y} < clip_lo OR {y} > clip_hi, false)")))
 
 
 def ts_unscale_by(df: DataFrame, value_cols: list[str],

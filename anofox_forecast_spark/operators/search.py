@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sqltext import dbl, q, sql_str
 from .pipeline import _words
 
 
@@ -40,48 +41,41 @@ def bm25_score(df: DataFrame, id_col: str, text_col: str,
     # token array projected ONCE (r13 CSE fix): the per-term tf filters
     # below each referenced the split expression, re-running it once per
     # TERM per row
-    ws = F.col("__ws")
-
-    def tf_of(term):
-        # a one-arg closure: a two-arg lambda would make F.filter pass the
-        # array index as the second argument
-        return F.size(F.filter(ws, lambda w: w == F.lit(term)))
-
-    base = (df.select(F.col(id_col), _words(F.col(text_col)).alias("__ws"))
-              .select(
-                  F.col(id_col),
-                  F.size(ws).alias("__dl"),
-                  *[tf_of(t).alias(f"__tf{i}") for i, t in enumerate(terms)]))
+    i_ = q(id_col)
+    base = (df.selectExpr(i_, f"{_words(q(text_col))} AS __ws")
+              .selectExpr(i_, "size(__ws) AS __dl", *[
+                  f"size(filter(__ws, x -> x = {sql_str(t)})) AS __tf{i}"
+                  for i, t in enumerate(terms)]))
     stats = base.agg(
-        F.count(F.lit(1)).alias("__n"),
-        F.sum("__dl").alias("__sumdl"),
-        *[F.sum((F.col(f"__tf{i}") > 0).cast("long")).alias(f"__df{i}")
+        F.expr("count(1) AS __n"), F.expr("sum(__dl) AS __sumdl"),
+        *[F.expr(f"sum(CAST(__tf{i} > 0 AS BIGINT)) AS __df{i}")
           for i in range(len(terms))])
     scored = base.join(F.broadcast(stats))
-    n = F.col("__n").cast("double")
-    avgdl = F.col("__sumdl").cast("double") / n
+    n = "CAST(__n AS DOUBLE)"
+    avgdl = f"(CAST(__sumdl AS DOUBLE) / {n})"
     # all-empty corpus edge (r12 property-suite find): avgdl == 0 made
     # the length norm divide by zero under ANSI mode. Every dl is 0 too,
     # so the norm's limit is 0 — and every tf is 0, so the score is 0
     # regardless; the guard is value-identical whenever any doc has words.
-    norm = F.when(F.col("__sumdl") > 0,
-                  F.col("__dl").cast("double") / avgdl).otherwise(F.lit(0.0))
-    score = F.lit(0.0)
+    norm = (f"CASE WHEN __sumdl > 0 THEN CAST(__dl AS DOUBLE) / {avgdl} "
+            "ELSE 0.0D END")
+    # the length factor k1 * (1 - b + b * norm), in the operand order the
+    # constants fold to: (norm * b + (1 - b)) * k1
+    length = f"((({norm}) * {dbl(b)} + {dbl(1.0 - b)}) * {dbl(k1)})"
+    score = "0.0D"
     for i in range(len(terms)):
-        tf = F.col(f"__tf{i}").cast("double")
-        dfreq = F.col(f"__df{i}").cast("double")
-        idf = F.log(F.lit(1.0) + (n - dfreq + 0.5) / (dfreq + 0.5))
+        tf = f"CAST(__tf{i} AS DOUBLE)"
+        dfreq = f"CAST(__df{i} AS DOUBLE)"
+        idf = f"ln(1.0D + ({n} - {dfreq} + 0.5D) / ({dfreq} + 0.5D))"
         # tf == 0 always means zero contribution, but the denominator
         # tf + k1*(1-b+b*norm) can ALSO be 0 then (b=1 with a
         # zero-length doc, or the all-empty corpus above) — 0/0 is NULL
         # under default Spark and an error under ANSI. Guarding the
         # whole term on tf > 0 covers every zero-denominator case at
         # once: tf > 0 implies the denominator >= tf > 0.
-        score = score + F.when(
-            tf > 0,
-            idf * (tf * (k1 + 1.0)
-                   / (tf + k1 * (1.0 - b + b * norm)))).otherwise(F.lit(0.0))
-    return scored.select(F.col(id_col), score.alias("score"))
+        score += (f" + CASE WHEN {tf} > 0 THEN {idf} * ({tf} * "
+                  f"{dbl(k1 + 1.0)} / ({tf} + {length})) ELSE 0.0D END")
+    return scored.selectExpr(i_, f"{score} AS score")
 
 
 def bm25_topk(df: DataFrame, id_col: str, text_col: str,
@@ -90,7 +84,7 @@ def bm25_topk(df: DataFrame, id_col: str, text_col: str,
     """Top-k documents by BM25 — ties break to the lower id. The orderBy +
     limit compiles to ``TakeOrderedAndProject`` (no full-sort shuffle)."""
     return (bm25_score(df, id_col, text_col, query_terms, k1, b)
-            .orderBy(F.col("score").desc(), F.col(id_col))
+            .orderBy(F.desc("score"), id_col)
             .limit(int(k)))
 
 
@@ -106,9 +100,8 @@ def top_terms(df: DataFrame, group_col: str, text_col: str,
     over the (group, term)-aggregated counts (rows = vocabulary size per
     group, not corpus size)."""
     from pyspark.sql import Window
-    from .pipeline import _words
     cnt = (df.select(F.col(group_col),
-                     F.explode(_words(F.col(text_col))).alias("term"))
+                     F.explode(F.expr(_words(q(text_col)))).alias("term"))
              .groupBy(group_col, "term")
              .agg(F.count(F.lit(1)).alias("term_count")))
     w = Window.partitionBy(group_col).orderBy(F.col("term_count").desc(),
@@ -128,9 +121,8 @@ def tfidf_top_terms(df: DataFrame, id_col: str, text_col: str,
     frequency count (count-only shuffles, never text payloads), a broadcast
     single-row N, and a per-document top-k window."""
     from pyspark.sql import Window
-    from .pipeline import _words
     toks = df.select(F.col(id_col),
-                     F.explode(_words(F.col(text_col))).alias("term"))
+                     F.explode(F.expr(_words(q(text_col)))).alias("term"))
     tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = (tf.groupBy("term")
                .agg(F.count(F.lit(1)).alias("__df")))

@@ -21,41 +21,48 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sqltext import dbl, q
 
-def _unit(vec: Column) -> Column:
+
+def _unit(vec: str) -> str:
+    """SQL text: the unit-normalized double array of ``vec``."""
     # the norm rides in as a zip_with argument instead of being referenced
     # inside the lambda (r13 CSE fix): an expression inside a higher-order-
     # function lambda is re-evaluated per array ELEMENT, so the old
     # transform(vec, x -> x / norm) recomputed the O(d) norm fold d times —
     # an O(d^2) normalize per row. array_repeat evaluates the norm once;
     # the division is value-identical.
-    norm = F.sqrt(F.aggregate(vec, F.lit(0.0),
-                              lambda a, x: a + x.cast("double") * x.cast("double")))
-    return F.zip_with(vec, F.array_repeat(norm, F.size(vec)),
-                      lambda x, nm: x.cast("double") / nm)
+    norm = (f"sqrt(aggregate({vec}, 0.0D, "
+            "(x, y) -> x + CAST(y AS DOUBLE) * CAST(y AS DOUBLE)))")
+    return (f"zip_with({vec}, array_repeat({norm}, size({vec})), "
+            "(x, y) -> CAST(x AS DOUBLE) / y)")
 
 
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                       F.lit(0.0), lambda acc, v: acc + v)
+def dot(a: str, b: str) -> str:
+    """SQL text: the sequential dot product of two arrays."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (x, y) -> x + y)"
+
+
+def _vec(values) -> str:
+    """SQL text: a double array literal (one literal per component)."""
+    return "array(" + ", ".join(dbl(float(x)) for x in values) + ")"
 
 
 def cosine_topk(df: DataFrame, id_col: str, vec_col: str,
                 query: list[float], k: int = 10) -> DataFrame:
     """Exact top-k by cosine similarity to ``query``.
     Output: (<id>, cosine), descending."""
-    q = np.asarray(query, dtype=float)
-    qn = float(np.linalg.norm(q))
+    qv = np.asarray(query, dtype=float)
+    qn = float(np.linalg.norm(qv))
     if qn == 0:
         raise ValueError("query vector has zero norm")
-    q = q / qn
-    qcol = F.array(*[F.lit(float(x)) for x in q])
-    cos = dot(_unit(F.col(vec_col)), qcol)
-    return (df.select(F.col(id_col), cos.alias("cosine"))
-              .orderBy(F.col("cosine").desc(), F.col(id_col))
+    qv = qv / qn
+    cos = dot(_unit(q(vec_col)), _vec(qv))
+    return (df.selectExpr(q(id_col), f"{cos} AS cosine")
+              .orderBy(F.desc("cosine"), id_col)
               .limit(int(k)))
 
 
@@ -194,7 +201,7 @@ def ivf_build(df: DataFrame, id_col: str, vec_col: str, n_clusters: int = 16,
         best_cell = F.array_min(F.array(*[
             F.struct(dists[c].alias("d"), F.lit(c).alias("c"))
             for c in range(len(C))]))["c"]
-        indexed = (df.withColumn("__uv", _unit(F.col(vec_col)))
+        indexed = (df.withColumn("__uv", F.expr(_unit(q(vec_col))))
                      .withColumn("__cell", best_cell)
                      .drop("__uv"))
     if repartition_by_cell:
@@ -209,13 +216,12 @@ def ivf_search(indexed_df: DataFrame, centroids: list[list[float]],
     cells nearest the query. No centroid learning, no extra shuffle — the
     ``__cell`` filter prunes partitions written by ``ivf_build``."""
     C = np.asarray(centroids, dtype=float)
-    q = np.asarray(query, dtype=float)
-    q = q / (float(np.sqrt(np.cumsum(q * q)[-1])) or 1.0)
-    qd = (C - q) * (C - q)
+    qv = np.asarray(query, dtype=float)
+    qv = qv / (float(np.sqrt(np.cumsum(qv * qv)[-1])) or 1.0)
+    qd = (C - qv) * (C - qv)
     probe_cells = np.argsort(np.cumsum(qd, axis=1)[:, -1],
                              kind="stable")[:n_probe].tolist()
-    qcol = F.array(*[F.lit(float(x)) for x in q])
-    cos = dot(_unit(F.col(vec_col)), qcol)
+    cos = F.expr(dot(_unit(q(vec_col)), _vec(qv)))
     return (indexed_df.filter(F.col("__cell").isin(probe_cells))
             .select(F.col(id_col), cos.alias("cosine"))
             .orderBy(F.col("cosine").desc(), F.col(id_col))
@@ -273,7 +279,7 @@ def pq_build(df: DataFrame, id_col: str, vec_col: str, m: int = 4,
         codes.append(F.array_min(F.array(*[
             F.struct(dists[c].alias("d"), F.lit(c).alias("c"))
             for c in range(len(B))]))["c"])
-    encoded = (df.withColumn("__uv", _unit(F.col(vec_col)))
+    encoded = (df.withColumn("__uv", F.expr(_unit(q(vec_col))))
                  .withColumn("__pq", F.array(*codes))
                  .drop("__uv"))
     return encoded, [[list(map(float, row)) for row in B] for B in books]
@@ -288,11 +294,11 @@ def pq_search(encoded_df: DataFrame, codebooks: list, id_col: str,
     ``cos ≈ 1 - d²/2``, which is what the ``cosine`` column reports."""
     books = [np.asarray(b, dtype=float) for b in codebooks]
     sub = books[0].shape[1]
-    q = np.asarray(query, dtype=float)
-    q = q / (float(np.sqrt(np.cumsum(q * q)[-1])) or 1.0)
+    qv = np.asarray(query, dtype=float)
+    qv = qv / (float(np.sqrt(np.cumsum(qv * qv)[-1])) or 1.0)
     d2 = F.lit(0.0)
     for j, B in enumerate(books):
-        qj = q[j * sub:(j + 1) * sub]
+        qj = qv[j * sub:(j + 1) * sub]
         diff = B - qj[None, :]
         table = np.cumsum(diff * diff, axis=1)[:, -1]
         tcol = F.array(*[F.lit(float(x)) for x in table])
@@ -335,8 +341,8 @@ def ivf_pq_search(indexed_df: DataFrame, centroids: list, codebooks: list,
     a probe reads n_probe/n_clusters of the data AND touches only the
     m-byte codes, never the raw vectors."""
     C = np.asarray(centroids, dtype=float)
-    q = np.asarray(query, dtype=float)
-    qn = q / (float(np.sqrt(np.cumsum(q * q)[-1])) or 1.0)
+    qv = np.asarray(query, dtype=float)
+    qn = qv / (float(np.sqrt(np.cumsum(qv * qv)[-1])) or 1.0)
     qd = (C - qn) * (C - qn)
     probe_cells = np.argsort(np.cumsum(qd, axis=1)[:, -1],
                              kind="stable")[:n_probe].tolist()
@@ -366,12 +372,12 @@ def semdedup_pairs(df: DataFrame, id_col: str, vec_col: str,
                            repartition_by_cell=False, centroids=centroids,
                            assign_mode=assign_mode)
     u = indexed.select(F.col(id_col).alias("__id"), "__cell",
-                       _unit(F.col(vec_col)).alias("__v"))
+                       F.expr(_unit(q(vec_col))).alias("__v"))
     a = u.select(F.col("__id").alias("id_a"), "__cell",
                  F.col("__v").alias("__va"))
     b = u.select(F.col("__id").alias("id_b"), "__cell",
                  F.col("__v").alias("__vb"))
-    cos = dot(F.col("__va"), F.col("__vb"))
+    cos = F.expr(dot("__va", "__vb"))
     return (a.join(b, "__cell").filter(F.col("id_a") < F.col("id_b"))
              .withColumn("cosine", cos)
              .filter(F.col("cosine") >= float(threshold))
@@ -422,15 +428,13 @@ def knn_join_lsh(left: DataFrame, right: DataFrame, left_id: str, right_id: str,
         # n_tables x n_planes dot folds referenced the normalize
         # expression per row otherwise
         pre = df.select(F.col(id_col).alias(out_id),
-                        _unit(F.col(vec_col)).alias(out_vec))
-        unit = F.col(out_vec)
+                        F.expr(_unit(q(vec_col))).alias(out_vec))
         tsigs = []
         for t in range(int(n_tables)):
             sig = F.lit(0).cast("long")
             for p in range(n_planes):
                 row = planes[t * n_planes + p]
-                plane = F.array(*[F.lit(float(row[j])) for j in range(d)])
-                s = dot(unit, plane)
+                s = F.expr(dot(q(out_vec), _vec(row)))
                 sig = sig.bitwiseOR(
                     F.when(s > 0, F.lit(2 ** p).cast("long"))
                      .otherwise(F.lit(0).cast("long")))
@@ -442,7 +446,7 @@ def knn_join_lsh(left: DataFrame, right: DataFrame, left_id: str, right_id: str,
 
     lt = sig_rows(left, left_id, "__lid", "__lv")
     rt = sig_rows(right, right_id, "__rid", "__rv")
-    cos = dot(F.col("__lv"), F.col("__rv"))
+    cos = F.expr(dot("__lv", "__rv"))
     w = Window.partitionBy("__lid").orderBy(F.col("cosine").desc(),
                                             F.col("__rid"))
     cand = lt.join(rt, ["__t", "__sig"])

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..frequency import Frequency, parse_frequency
+from ..sqltext import dbl, q, sql_str
 
 EPS = 2.220446049250313e-16
 
@@ -673,21 +674,20 @@ def group_quantiles(df: DataFrame, key_cols: list[str], value_col: str,
     from pyspark.sql import functions as F
     if not qs:
         raise ValueError("qs must be non-empty")
-    arr = F.array_sort(F.collect_list(
-        F.when(F.col(value_col).isNotNull(),
-               F.col(value_col).cast("double"))))
-    # the type-7 interpolation is the ONE shared Column helper
+    v = q(value_col)
+    arr = F.expr(f"array_sort(collect_list(CASE WHEN {v} IS NOT NULL THEN "
+                 f"CAST({v} AS DOUBLE) END)) AS __a")
+    # the type-7 interpolation is the ONE shared SQL-text helper
     # (prep._q7) — scaling/winsorization and every quantile oracle rely
     # on these expressions staying bit-identical, so the identity is
     # structural, not comment-enforced
     from .prep import _q7
-    base = df.groupBy(*key_cols).agg(arr.alias("__a"))
-    n = F.size("__a")
-    cols = [n.alias("n")]
-    for q in qs:
-        label = f"q_{str(q).replace('.', '_')}"
-        cols.append(_q7(F.col("__a"), n, float(q)).alias(label))
-    return base.select(*key_cols, *cols)
+    base = df.groupBy(*key_cols).agg(arr)
+    cols = ["size(__a) AS n"]
+    for qt in qs:
+        label = f"q_{str(qt).replace('.', '_')}"
+        cols.append(f"{_q7('__a', 'size(__a)', float(qt))} AS {q(label)}")
+    return base.selectExpr(*map(q, key_cols), *cols)
 
 
 def hll_count_distinct(df: DataFrame, key_col: str,
@@ -764,26 +764,25 @@ def _hll_bucket_rho_df(df: DataFrame, key_col: str, gcols: list[str],
     if not (4 <= precision_bits <= 16) or precision_bits % 4 != 0:
         raise ValueError("precision_bits must be 4, 8, 12, or 16")
     nib = precision_bits // 4
-    p1 = (df.filter(F.col(key_col).isNotNull())
-            .select(*gcols,
-                    F.md5(F.concat_ws(":", F.lit(seed),
-                                      F.col(key_col).cast("string")))
-                     .alias("__h")))
-    p2 = p1.select(*gcols,
-                   F.conv(F.substring("__h", 1, nib), 16, 10).cast("bigint")
-                    .alias("hll_bucket"),
-                   F.substring("__h", nib + 1, 15).alias("__s"))
-    p3 = p2.select(*gcols, "hll_bucket", "__s",
-                   F.regexp_replace("__s", "^0+", "").alias("__st"))
-    first = F.upper(F.substring("__st", 1, 1))
-    nib_lz = (F.when(first == "1", 3)
-               .when(first.isin("2", "3"), 2)
-               .when(first.isin("4", "5", "6", "7"), 1)
-               .otherwise(0))
-    zchars = F.length("__s") - F.length("__st")
-    rho = (F.when(F.length("__st") == 0, F.lit(61))
-            .otherwise(zchars * 4 + nib_lz + 1)).cast("int")
-    return p3.select(*gcols, "hll_bucket", rho.alias("hll_max_rho"))
+    g = [q(c) for c in gcols]
+    k = q(key_col)
+    p1 = (df.filter(f"{k} IS NOT NULL")
+            .selectExpr(*g, f"md5(concat_ws(':', {sql_str(seed)}, "
+                            f"CAST({k} AS STRING))) AS __h"))
+    p2 = p1.selectExpr(
+        *g, f"CAST(conv(substring(__h, 1, {nib}), 16, 10) AS BIGINT) "
+            "AS hll_bucket",
+        f"substring(__h, {nib + 1}, 15) AS __s")
+    p3 = p2.selectExpr(*g, "hll_bucket", "__s",
+                       "regexp_replace(__s, '^0+', '') AS __st")
+    first = "upper(substring(__st, 1, 1))"
+    nib_lz = (f"CASE WHEN {first} = '1' THEN 3 "
+              f"WHEN {first} IN ('2', '3') THEN 2 "
+              f"WHEN {first} IN ('4', '5', '6', '7') THEN 1 ELSE 0 END")
+    zchars = "length(__s) - length(__st)"
+    rho = (f"CAST(CASE WHEN length(__st) = 0 THEN 61 "
+           f"ELSE ({zchars}) * 4 + ({nib_lz}) + 1 END AS INT)")
+    return p3.selectExpr(*g, "hll_bucket", f"{rho} AS hll_max_rho")
 
 
 def hll_registers(df: DataFrame, key_col: str,
@@ -801,7 +800,7 @@ def hll_registers(df: DataFrame, key_col: str,
     gcols = list(group_cols or [])
     return (_hll_bucket_rho_df(df, key_col, gcols, precision_bits, seed)
             .groupBy(*gcols, "hll_bucket")
-            .agg(F.max("hll_max_rho").alias("hll_max_rho")))
+            .agg(F.expr("max(hll_max_rho) AS hll_max_rho")))
 
 
 def hll_merge_registers(*reg_dfs: DataFrame) -> DataFrame:
@@ -828,29 +827,24 @@ def hll_estimate_from_registers(regs: DataFrame,
     m = 1 << precision_bits
     # deterministic float fold: registers sorted by bucket id, sequential
     # sum of exact powers of two (order-pinned, replayable engine-side)
-    packed = regs.groupBy(*gcols).agg(
-        F.array_sort(F.collect_list(F.struct(
-            F.col("hll_bucket").alias("__b"),
-            F.col("hll_max_rho").alias("__m")))).alias("__rs"))
-    used = F.size("__rs")
-    ssum = F.aggregate(
-        F.col("__rs"), F.lit(0.0),
-        lambda acc, r: acc + F.pow(F.lit(2.0), -r["__m"].cast("double")))
+    packed = regs.groupBy(*gcols).agg(F.expr(
+        "array_sort(collect_list(struct(hll_bucket AS __b, "
+        "hll_max_rho AS __m))) AS __rs"))
+    ssum = ("aggregate(__rs, 0.0D, "
+            "(x, y) -> x + POWER(2.0D, -CAST(y.__m AS DOUBLE)))")
     # empty buckets contribute 2^0 = 1 each
-    zeros = (F.lit(m) - used).cast("double")
+    zeros = f"CAST({m} - size(__rs) AS DOUBLE)"
     # canonical Flajolet bias correction: 0.673 only for m=16; the
     # closed form 0.7213/(1+1.079/m) for m>=128 (ADVICE r8: the old
     # pinned literals 0.718213/0.722572 carried a +0.2% transcription
     # bias; operator, oracle, and test replay moved together)
     alpha = 0.673 if m == 16 else 0.7213 / (1 + 1.079 / m)
-    raw = F.lit(alpha * m * m) / (ssum + zeros)
+    raw = f"({dbl(alpha * m * m)} / ({ssum} + {zeros}))"
     # linear counting below the 2.5m threshold when empty buckets remain
-    est = F.when((raw <= F.lit(2.5 * m)) & (zeros > 0),
-                 F.lit(float(m)) * F.log(F.lit(float(m)) / zeros)) \
-           .otherwise(raw)
-    return packed.select(*gcols,
-                         est.alias("hll_estimate"),
-                         used.cast("bigint").alias("n_buckets_used"))
+    est = (f"CASE WHEN {raw} <= {dbl(2.5 * m)} AND {zeros} > 0 THEN "
+           f"{dbl(float(m))} * ln({dbl(float(m))} / {zeros}) ELSE {raw} END")
+    return packed.selectExpr(*map(q, gcols), f"{est} AS hll_estimate",
+                             "CAST(size(__rs) AS BIGINT) AS n_buckets_used")
 
 
 def _bloom_check(m_bits: int, k: int) -> None:

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sqltext import q, sql_str
+
 WORD_RE = r"\w+"
 # BPE-ish pre-tokenizer: word pieces OR single non-space punctuation
 BPE_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
@@ -36,30 +38,36 @@ STOPWORDS = {
 LANG_PRIORITY = ["en", "de", "fr", "es", "it"]
 
 
-def _words(text: Column) -> Column:
-    return F.split(F.lower(F.trim(text)), r"\s+")
-
-
 # ---------------------------------------------------------------------------
 # Token counting
 # ---------------------------------------------------------------------------
 
-def token_count(text: Column, method: str = "whitespace") -> Column:
-    """Token count column. 'whitespace' splits on runs of whitespace;
-    'bpe' counts BPE-ish pre-tokens (letter runs, digit runs, punctuation)."""
+_WS_SQL = sql_str(r"\s+")
+
+
+def _words(text: str) -> str:
+    """SQL text: lowercased words of the SQL expression ``text`` split on
+    whitespace runs (blank text gives ``['']``)."""
+    return f"split(lower(trim({text})), {_WS_SQL})"
+
+
+def token_count(text: str, method: str = "whitespace") -> str:
+    """SQL text: token count of the SQL expression ``text``. 'whitespace'
+    splits on runs of whitespace; 'bpe' counts BPE-ish pre-tokens (letter
+    runs, digit runs, punctuation)."""
     if method == "whitespace":
-        return F.when(F.length(F.trim(text)) == 0, F.lit(0)) \
-                .otherwise(F.size(F.split(F.trim(text), r"\s+")))
+        return (f"CASE WHEN length(trim({text})) = 0 THEN 0 "
+                f"ELSE size(split(trim({text}), {_WS_SQL})) END")
     if method == "bpe":
-        return F.regexp_count(text, F.lit(BPE_RE))
+        return f"regexp_count({text}, {sql_str(BPE_RE)})"
     raise ValueError(f"unknown token method {method!r}")
 
 
 def text_token_counts(df: DataFrame, text_col: str) -> DataFrame:
     """Adds n_tokens_ws and n_tokens_bpe columns."""
-    t = F.col(text_col)
-    return (df.withColumn("n_tokens_ws", token_count(t, "whitespace"))
-              .withColumn("n_tokens_bpe", token_count(t, "bpe")))
+    t = q(text_col)
+    return (df.withColumn("n_tokens_ws", F.expr(token_count(t, "whitespace")))
+              .withColumn("n_tokens_bpe", F.expr(token_count(t, "bpe"))))
 
 
 # ---------------------------------------------------------------------------
@@ -78,44 +86,40 @@ def text_quality(df: DataFrame, text_col: str) -> DataFrame:
     2.5x on the bench key). CollapseProject keeps the two Projects
     separate because the aliases are non-cheap and multiply referenced.
     Ratio/score formulas are unchanged — same ops on the same values."""
-    t = F.col(text_col)
-    en_stop = F.array(*[F.lit(w) for w in STOPWORDS["en"]])
-    pre = df.withColumn(
-        "__tq_nc", F.length(t)).withColumn(
-        "__tq_nw", token_count(t, "whitespace")).withColumn(
-        "__tq_np", F.regexp_count(t, F.lit(PUNCT_RE))).withColumn(
-        "__tq_na", F.regexp_count(t, F.lit(r"[A-Za-z]"))).withColumn(
-        "__tq_ns", F.size(F.array_intersect(F.array_distinct(_words(t)),
-                                            en_stop)))
-    n_chars = F.col("__tq_nc")
-    n_words = F.col("__tq_nw")
-    n_punct = F.col("__tq_np")
-    n_alpha = F.col("__tq_na")
-    n_stop = F.col("__tq_ns")
-    mean_word_len = F.when(n_words > 0, n_chars.cast("double") / n_words) \
-                     .otherwise(F.lit(0.0))
-    punct_ratio = F.when(n_chars > 0, n_punct.cast("double") / n_chars) \
-                   .otherwise(F.lit(0.0))
-    alpha_ratio = F.when(n_chars > 0, n_alpha.cast("double") / n_chars) \
-                   .otherwise(F.lit(0.0))
-    stop_ratio = F.when(n_words > 0, n_stop.cast("double")
-                        / F.least(n_words, F.lit(20)).cast("double")) \
-                  .otherwise(F.lit(0.0))
-    length_score = F.least(n_words.cast("double") / 100.0, F.lit(1.0))
-    punct_score = F.when(punct_ratio <= 0.2, 1.0).otherwise(
-        F.greatest(F.lit(0.0), 1.0 - (punct_ratio - 0.2) * 4.0))
-    word_len_score = F.when((mean_word_len >= 3.0) & (mean_word_len <= 10.0), 1.0) \
-                      .otherwise(F.lit(0.5))
-    score = (0.3 * length_score + 0.2 * punct_score + 0.2 * alpha_ratio
-             + 0.15 * F.least(stop_ratio * 4.0, F.lit(1.0))
-             + 0.15 * word_len_score)
-    return (pre.withColumn("n_chars_text", n_chars)
-               .withColumn("n_words", n_words)
-               .withColumn("punct_ratio", punct_ratio)
-               .withColumn("alpha_ratio", alpha_ratio)
-               .withColumn("stopword_ratio", stop_ratio)
-               .withColumn("mean_word_len", mean_word_len)
-               .withColumn("quality_score", score)
+    t = q(text_col)
+    en_stop = "array(" + ", ".join(map(sql_str, STOPWORDS["en"])) + ")"
+    pre = df.selectExpr(
+        "*", f"length({t}) AS __tq_nc",
+        f"{token_count(t)} AS __tq_nw",
+        f"regexp_count({t}, {sql_str(PUNCT_RE)}) AS __tq_np",
+        f"regexp_count({t}, '[A-Za-z]') AS __tq_na",
+        f"size(array_intersect(array_distinct({_words(t)}), {en_stop})) "
+        "AS __tq_ns")
+    mean_word_len = ("CASE WHEN __tq_nw > 0 THEN CAST(__tq_nc AS DOUBLE) "
+                     "/ __tq_nw ELSE 0.0D END")
+    punct_ratio = ("CASE WHEN __tq_nc > 0 THEN CAST(__tq_np AS DOUBLE) "
+                   "/ __tq_nc ELSE 0.0D END")
+    alpha_ratio = ("CASE WHEN __tq_nc > 0 THEN CAST(__tq_na AS DOUBLE) "
+                   "/ __tq_nc ELSE 0.0D END")
+    stop_ratio = ("CASE WHEN __tq_nw > 0 THEN CAST(__tq_ns AS DOUBLE) "
+                  "/ CAST(least(__tq_nw, 20) AS DOUBLE) ELSE 0.0D END")
+    length_score = "least(CAST(__tq_nw AS DOUBLE) / 100.0D, 1.0D)"
+    punct_score = (f"CASE WHEN ({punct_ratio}) <= 0.2D THEN 1.0D ELSE "
+                   f"greatest(0.0D, 1.0D - (({punct_ratio}) - 0.2D) * 4.0D) "
+                   "END")
+    word_len_score = (f"CASE WHEN ({mean_word_len}) >= 3.0D AND "
+                      f"({mean_word_len}) <= 10.0D THEN 1.0D ELSE 0.5D END")
+    score = (f"({length_score}) * 0.3D + ({punct_score}) * 0.2D "
+             f"+ ({alpha_ratio}) * 0.2D "
+             f"+ least(({stop_ratio}) * 4.0D, 1.0D) * 0.15D "
+             f"+ ({word_len_score}) * 0.15D")
+    return (pre.selectExpr("*", "__tq_nc AS n_chars_text",
+                           "__tq_nw AS n_words",
+                           f"{punct_ratio} AS punct_ratio",
+                           f"{alpha_ratio} AS alpha_ratio",
+                           f"{stop_ratio} AS stopword_ratio",
+                           f"{mean_word_len} AS mean_word_len",
+                           f"{score} AS quality_score")
                .drop("__tq_nc", "__tq_nw", "__tq_np", "__tq_na", "__tq_ns"))
 
 
@@ -130,7 +134,7 @@ def language_id(df: DataFrame, text_col: str) -> DataFrame:
     # it into each score column re-ran split(lower(trim(text))) once per
     # language per row
     out = df.withColumn("__li_words",
-                        F.array_distinct(_words(F.col(text_col))))
+                        F.expr(f"array_distinct({_words(q(text_col))})"))
     words = F.col("__li_words")
     for lang in LANG_PRIORITY:
         arr = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
@@ -154,6 +158,11 @@ def normalize_text(text: Column) -> Column:
     """Lowercase + collapse whitespace + trim — the canonical form for
     exact-dup fingerprints."""
     return F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
+
+
+def normalize_text_sql(text: str) -> str:
+    """SQL-text form of :func:`normalize_text`."""
+    return f"trim(regexp_replace(lower({text}), {_WS_SQL}, ' '))"
 
 
 def text_fingerprint(df: DataFrame, text_col: str) -> DataFrame:
@@ -207,21 +216,19 @@ def pii_redact(df: DataFrame, text_col: str,
     no lookaround, no possessive quantifiers), so a DuckDB
     ``regexp_replace(..., 'g')`` replay is bit-identical.
     """
-    t = F.col(text_col)
+    t = q(text_col)
     counts = {f"n_{kind}s" if kind != "ipv4" else "n_ipv4":
-              F.regexp_count(t, F.lit(pat)).cast("int")
+              f"CAST(regexp_count({t}, {sql_str(pat)}) AS INT)"
               for kind, pat, _ in PII_PATTERNS}
     red = t
     for _, pat, token in PII_PATTERNS:
-        red = F.regexp_replace(red, pat, token)
+        red = f"regexp_replace({red}, {sql_str(pat)}, {sql_str(token)})"
     # r13 CSE fix: n_pii sums the BOUND count columns — summing the count
     # expressions re-ran every PII regex scan a second time per row
-    pre = df.withColumns(counts)
-    total = None
-    for name in counts:
-        c = F.col(name)
-        total = c if total is None else total + c
-    return pre.withColumns({"n_pii": total.cast("int"), out_col: red})
+    pre = df.withColumns({k: F.expr(v) for k, v in counts.items()})
+    total = " + ".join(map(q, counts))
+    return pre.withColumns({"n_pii": F.expr(f"CAST({total} AS INT)"),
+                            out_col: F.expr(red)})
 
 
 def text_entropy(df: DataFrame, text_col: str) -> DataFrame:
@@ -248,7 +255,8 @@ def text_entropy(df: DataFrame, text_col: str) -> DataFrame:
     chars = F.when(F.length(t) > 0,
                    F.transform(F.sequence(F.lit(1), F.length(t)),
                                lambda i: t.substr(i, F.lit(1))))              .otherwise(empty)
-    words = F.when(F.length(F.trim(t)) > 0, _words(t)).otherwise(empty)
+    words = F.when(F.length(F.trim(t)) > 0,
+                   F.expr(_words(q(text_col)))).otherwise(empty)
 
     def entropy(arr):
         # r13: run-length fold over the SORTED array instead of a

@@ -42,8 +42,8 @@ def get_spark(app_name: str = "anofox-forecast-spark", master: str | None = None
         .config("spark.sql.optimizer.excludedRules",
                 "org.apache.spark.sql.catalyst.optimizer."
                 "InferFiltersFromGenerate")
-        # read TIMESTAMP(NANOS) parquet columns as long (Spark has no nanos
-        # type); sources convert to microsecond timestamps where needed
+        # read users' TIMESTAMP(NANOS) parquet columns as long (Spark has no
+        # nanos type); the driver tables store micros (sources.SCHEMAS)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")

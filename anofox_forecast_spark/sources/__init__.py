@@ -5,8 +5,8 @@ The engine's universal input shape is the long-format panel
 parquet tables and derive deterministic panels from them, matching the
 derivations documented in FIXTURES.md ("Driver testdata mapping").
 
-All readers are plain ``spark.read.parquet`` — predicate pushdown and
-column pruning reach the scan for free.
+All readers are ``spark.read.parquet`` with the table's pinned schema —
+predicate pushdown and column pruning reach the scan for free.
 """
 
 from __future__ import annotations
@@ -32,64 +32,48 @@ TABLES = (
 #: the safe path.
 NO_NAN_METADATA = "anofox_no_nan"
 
-# Opt-in panel cache (bench.py): the headline queries all re-derive the same
-# scan+groupBy panel; persisting it once removes the repeated input stage.
-# Off by default — the correctness driver hands us fresh sessions and must
-# never see a DataFrame bound to an older one.
-_CACHE: dict[tuple, DataFrame] = {}
-_CACHE_ENABLED = False
-
-
-def enable_source_cache(enabled: bool = True) -> None:
-    global _CACHE_ENABLED
-    _CACHE_ENABLED = enabled
-    if not enabled:
-        for df in _CACHE.values():
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        _CACHE.clear()
-
-
-def _cached(key: tuple, build, spread: bool = False,
-            partition_on: str | None = None):
-    if not _CACHE_ENABLED:
-        return build()
-    if key not in _CACHE:
-        from pyspark import StorageLevel
-        df = build()
-        if partition_on is not None:
-            # persist hash-partitioned on the series key: the cached scan
-            # then already satisfies every downstream window / groupBy
-            # ClusteredDistribution on that key, so repeated per-series
-            # queries run shuffle-free off the cache — the in-memory
-            # analogue of bucketing the panel table at 100 TB
-            df = df.repartition(partition_on)
-        elif spread:
-            # one small parquet file scans as ONE partition; when persisting
-            # for repeated reuse, spread it across the executors first (at
-            # real scale many input files provide this parallelism natively)
-            df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-        _CACHE[key] = df.persist(StorageLevel.MEMORY_AND_DISK)
-    return _CACHE[key]
+#: The fixed driver tables' schemas, pinned as DDL so a read skips the
+#: parquet footer inference (one Spark job and ~0.1 s per read). They equal
+#: the inferred schemas of every testdata scale and of the benchmark's
+#: generator (tests/test_sources.py). ``ts`` is stored as INT64
+#: TIMESTAMP(MICROS, isAdjustedToUTC=false), which Spark reads as
+#: ``timestamp_ntz``.
+SCHEMAS = {
+    "region": "r_regionkey int, r_name string",
+    "nation": "n_nationkey int, n_name string, n_regionkey int",
+    "customer": "c_custkey bigint, c_name string, c_nationkey int, "
+                "c_acctbal double, c_mktsegment string",
+    "supplier": "s_suppkey bigint, s_name string, s_nationkey int, "
+                "s_acctbal double",
+    "part": "p_partkey bigint, p_name string, p_brand string, p_type string, "
+            "p_size int, p_retailprice double",
+    "orders": "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
+              "o_totalprice double, o_orderdate timestamp_ntz, "
+              "o_orderpriority string",
+    "lineitem": "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, "
+                "l_linenumber int, l_quantity double, l_extendedprice double, "
+                "l_discount double, l_tax double, l_returnflag string, "
+                "l_linestatus string, l_shipdate timestamp_ntz",
+    "events": "event_id bigint, ts timestamp_ntz, user_id bigint, "
+              "event_type string, value double, props string",
+    "documents": "doc_id bigint, text string, lang string, source string, "
+                 "n_chars bigint",
+    "embeddings": "vec_id bigint, embedding array<float>, label int",
+}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One of the fixed driver tables, read with its pinned schema.
+
+    A user-given schema is not checked against the file: a column the
+    file lacks reads as silent NULLs, and a column stored with another
+    type fails only when a task reads it (an ``events.ts`` written as
+    TIMESTAMP(NANOS) fails with a data-type mismatch instead of reading
+    wrong values). That is why this reader serves only the fixed tables
+    of :data:`SCHEMAS`; read other parquet with ``spark.read.parquet``."""
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}")
-    # The events table stores TIMESTAMP(NANOS), which vanilla Spark sessions
-    # refuse to read (PARQUET_TYPE_ILLEGAL). nanosAsLong is a runtime-settable
-    # SQL conf, so set it here rather than relying on the session factory —
-    # callers hand us arbitrary sessions (e.g. the correctness driver's).
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if name in ("documents", "embeddings"):
-        # small dimension-like tables reread by every LLM-pipeline query
-        return _cached(
-            (name, sf_dir),
-            lambda: spark.read.parquet(f"{sf_dir}/{name}.parquet"),
-            spread=True)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return spark.read.schema(SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
 
 
 def lineitem_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -109,80 +93,45 @@ def lineitem_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     property the DuckDB-oracle hash match has always relied on. The
     orders panel keeps the default keying (o_totalprice is fractional;
     its sum order is observable at the last ulp)."""
-    def build():
-        li = load_table(spark, sf_dir, "lineitem")
-        return (
-            li.select(
-                F.col("l_suppkey").alias("id"),
-                F.date_trunc("day", F.col("l_shipdate")).alias("ds"),
-                F.col("l_quantity"),
-            )
-            .repartition(F.col("id"))
-            .groupBy("id", "ds")
-            # sum over a non-empty group is never NULL; the coalesce is a
-            # no-op at runtime but marks y non-nullable in the schema, and
-            # the nanvl step maps a (never-occurring) NaN sum to NULL ->
-            # 0.0, making the attached no-NaN witness true BY CONSTRUCTION
-            # — together they let interpolate_nulls_df skip its
-            # null-repair window passes entirely under BOTH missing-value
-            # semantics (see NO_NAN_METADATA)
-            .agg(F.coalesce(F.nanvl(F.sum("l_quantity"),
-                                    F.lit(None).cast("double")),
-                            F.lit(0.0))
-                  .alias("y", metadata={NO_NAN_METADATA: True}))
-        )
-    return _cached(("lineitem_panel", sf_dir), build, partition_on="id")
+    li = load_table(spark, sf_dir, "lineitem")
+    # sum over a non-empty group is never NULL; the coalesce is a no-op at
+    # runtime but marks y non-nullable in the schema, and the nanvl step
+    # maps a (never-occurring) NaN sum to NULL -> 0.0, making the attached
+    # no-NaN witness true BY CONSTRUCTION — together they let
+    # interpolate_nulls_df skip its null-repair window passes entirely
+    # under BOTH missing-value semantics (see NO_NAN_METADATA)
+    y = F.expr("coalesce(nanvl(sum(l_quantity), CAST(NULL AS DOUBLE)), 0.0D)")
+    return (li.selectExpr("l_suppkey AS id",
+                          "date_trunc('day', l_shipdate) AS ds", "l_quantity")
+              .repartition("id")
+              .groupBy("id", "ds")
+              .agg(y.alias("y", metadata={NO_NAN_METADATA: True})))
 
 
 def orders_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sparse intermittent-like panel: (o_custkey, day(o_orderdate), sum price)."""
     o = load_table(spark, sf_dir, "orders")
-    return (
-        o.select(
-            F.col("o_custkey").alias("id"),
-            F.date_trunc("day", F.col("o_orderdate")).alias("ds"),
-            F.col("o_totalprice"),
-        )
-        .groupBy("id", "ds")
-        .agg(F.sum("o_totalprice").alias("y"))
-    )
+    return (o.selectExpr("o_custkey AS id",
+                         "date_trunc('day', o_orderdate) AS ds",
+                         "o_totalprice")
+             .groupBy("id", "ds")
+             .agg(F.expr("sum(o_totalprice) AS y")))
 
 
 def events_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The events table with ``ts`` as a true microsecond timestamp.
-
-    The parquet stores TIMESTAMP(NANOS) (read as long via nanosAsLong);
-    the conversion uses integer ``div 1000`` — exact, and identical to
-    DuckDB's nanos->micros truncation. (``events_panel``'s float ``/1000``
-    is fine for its day-truncated use but can be off by ~256 ns at 2^60
-    magnitudes, which matters for as-of joins and session gaps.)"""
-    from pyspark.sql import types as T
-    e = load_table(spark, sf_dir, "events")
-    if isinstance(e.schema["ts"].dataType, T.LongType):
-        e = e.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return e
+    """The events table; ``ts`` is a microsecond ``timestamp_ntz``."""
+    return load_table(spark, sf_dir, "events")
 
 
 def events_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Irregular panel: (user_id, day(ts), count(*)).
-
-    The events table stores TIMESTAMP(NANOS); with
-    ``spark.sql.legacy.parquet.nanosAsLong`` it arrives as a long that we
-    convert to a microsecond timestamp here.
-    """
-    from pyspark.sql import types as T
+    """Irregular panel: (user_id, day(ts), count(*))."""
     e = load_table(spark, sf_dir, "events")
-    ts = F.col("ts")
-    if isinstance(e.schema["ts"].dataType, T.LongType):
-        ts = F.timestamp_micros((F.col("ts") / 1000).cast("long"))
-    return (
-        e.select(F.col("user_id").alias("id"), F.date_trunc("day", ts).alias("ds"))
-        # hash(id)-keyed exchange shared with the per-series stages (see
-        # lineitem_panel); counts are exact integers, order-free
-        .repartition(F.col("id"))
-        .groupBy("id", "ds")
-        .agg(F.count(F.lit(1)).cast("double").alias("y"))
-    )
+    return (e.selectExpr("user_id AS id", "date_trunc('day', ts) AS ds")
+             # hash(id)-keyed exchange shared with the per-series stages
+             # (see lineitem_panel); counts are exact integers, order-free
+             .repartition("id")
+             .groupBy("id", "ds")
+             .agg(F.expr("CAST(count(1) AS DOUBLE) AS y")))
 
 
 # DuckDB-SQL equivalents of the panel derivations, for oracle queries.

@@ -50,15 +50,10 @@ def main() -> None:
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # r13 measurement fix: NO source cache. Rounds 4-12 persisted the
-    # shared lineitem panel + documents/embeddings tables before the
-    # timing loop, so the per-query numbers skipped the scan+groupBy
-    # input stage — result caching outside the timed region. Every timed
-    # run now computes from the parquet inputs end to end. The embedded
-    # prev-snapshot A/B disables the cache in the previous round's
-    # harness too (see _prev_snapshot_bench) so the cross-round delta
-    # stays like-for-like; OPTIMIZATION_r13.md keeps both methodologies'
-    # numbers for the record.
+    # No source cache: every timed run computes from the parquet inputs
+    # end to end (rounds 4-12 persisted the shared panel and tables
+    # before the timing loop; OPTIMIZATION_r13.md keeps both
+    # methodologies' numbers for the record).
 
     # Warm-up so query timings reflect steady state, not one-time startup:
     # parquet footer reads, whole-stage codegen compilation, and the Python
@@ -224,20 +219,6 @@ def _prev_snapshot_bench() -> dict | None:
         wt = tempfile.mkdtemp(prefix="bench_ab_")
         subprocess.run(["git", "worktree", "add", "--detach", wt, commit],
                        cwd=repo, capture_output=True, timeout=60, check=True)
-        # r13 methodology alignment: older round harnesses pre-persisted
-        # the shared source tables before their timing loop (see the r13
-        # measurement-fix note in main). Disable that cache in the
-        # snapshot's harness so both sides time the same thing — the full
-        # from-parquet computation. This edits ONLY the measurement
-        # harness in the throwaway worktree, never operator code.
-        old_bench = os.path.join(wt, "bench.py")
-        with open(old_bench) as fh:
-            src = fh.read()
-        patched = src.replace("SRC.enable_source_cache(True)",
-                              "SRC.enable_source_cache(False)")
-        cache_patched = patched != src
-        with open(old_bench, "w") as fh:
-            fh.write(patched)
         env = dict(os.environ, SPARK_GRAFT_AB="0")
         res = subprocess.run([sys.executable, os.path.join(wt, "bench.py")],
                              cwd=wt, capture_output=True, text=True,
@@ -247,9 +228,7 @@ def _prev_snapshot_bench() -> dict | None:
             if line.startswith("{"):
                 prev = json.loads(line)
                 return {"commit": commit[:12], "value": prev.get("value"),
-                        "queries": prev.get("queries"),
-                        "methodology": ("source_cache_disabled_in_both"
-                                        if cache_patched else "as_committed")}
+                        "queries": prev.get("queries")}
         return None
     except Exception as exc:  # noqa: BLE001
         print(f"prev-snapshot A/B skipped: {exc}", file=sys.stderr)

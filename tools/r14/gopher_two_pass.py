@@ -39,13 +39,13 @@ def main():
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.sparkContext.setLogLevel("ERROR")
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    pre = docs.select(F.col("doc_id"), _words(F.col("text")).alias("__ws"),
+    pre = docs.select(F.col("doc_id"), F.expr(_words("text")).alias("__ws"),
                       F.length("text").alias("n_chars"))
     # current shape's gram frame
     g_old = None
     for n in (*TOP_NS, *DUP_NS):
         g = (pre.select("doc_id", "n_chars",
-                        F.explode(PL._word_ngrams(F.col("__ws"), n)).alias("gram"))
+                        F.explode(F.expr(PL._word_ngrams("__ws", n))).alias("gram"))
                 .withColumn("n", F.lit(n)))
         g_old = g if g_old is None else g_old.unionByName(g)
     g_new = gram_frame_leads(pre, "doc_id")

@@ -16,12 +16,10 @@ QUERIES = [
 ]
 
 from anofox_forecast_spark.session import get_spark
-from anofox_forecast_spark import sources as SRC
 import __spark_entry__ as entry_mod
 
 spark = get_spark(app_name="anofox-soak10x", shuffle_partitions=32)
 spark.sparkContext.setLogLevel("ERROR")
-SRC.enable_source_cache(True)
 qs = entry_mod.queries()
 
 # JIT/worker-pool warm-up at the smallest SF
@@ -33,7 +31,6 @@ for name in QUERIES:
 
 out = {}
 for label, d in SCALES.items():
-    SRC.lineitem_panel(spark, d).write.format("noop").mode("overwrite").save()
     t = {}
     for name in QUERIES:
         best = -1.0
